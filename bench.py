@@ -9,45 +9,12 @@ collect); timings include plan + execution but share one warm SparkSession.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _historical_best(sf_val):
-    """Best per-entry seconds over the LAST THREE round artifacts (plus
-    the latest local bench_full.json) at the SAME scale factor — the
-    cross-round drift baseline (r12 VERDICT #6). BAND-based rather
-    than all-time (r13 VERDICT 'What's wrong' #2): an all-time best
-    keeps an ancient outlier alive forever — minhash_lsh_fast's r6
-    0.975 and ann_recall's r2 1.377 re-flagged every round while both
-    entries sat squarely in their multi-round steady bands — so the
-    baseline now tracks the recent band and still trips on a genuine
-    fresh regression (>1.5x anything seen in the last three rounds).
-    Driver artifacts wrap the compact line under "parsed" (medians); a
-    local bench_full.json additionally carries per-entry mins."""
-    best = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))[-3:]
-    paths.append(os.path.join(here, "bench_full.json"))
-    for p in paths:
-        try:
-            with open(p) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue
-        doc = doc.get("parsed", doc) or {}
-        if doc.get("sf") != sf_val:
-            continue
-        for src_key in ("queries_min", "queries"):
-            for k, v in (doc.get(src_key) or {}).items():
-                if isinstance(v, (int, float)):
-                    best[k] = min(best.get(k, float("inf")), float(v))
-    return best
 
 
 def main():
@@ -483,36 +450,23 @@ def main():
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # auto-recheck, two triggers:
-    # (a) in-run spike (r11 VERDICT #1): median > 2x the same run's MIN
-    #     means an external spike hit some reps of that entry;
-    # (b) cross-round drift (r12 VERDICT #6): median > 1.5x the entry's
-    #     best historical reading at this sf from prior BENCH artifacts
-    #     — catches the slow environmental creep the in-run check
-    #     can't see.
-    # Either way: three more reps at the end (the host spike has
-    # usually passed by then) so the REPORTED median reflects the
-    # plan, not the noise; the trigger reason rides into the artifact.
+    # auto-recheck on an in-run spike (r11 VERDICT #1): median > 2x the
+    # same run's MIN means an external spike hit some reps of that
+    # entry. Three more reps at the end (the host spike has usually
+    # passed by then) so the REPORTED median reflects the plan, not the
+    # noise; the trigger reason rides into the artifact. Comparison
+    # across rounds is left to the round artifacts: a baseline read from
+    # local files would let a stale file decide what gets re-run.
     rechecked, recheck_reasons = [], {}
     recheck_wait_sec, recheck_load, recheck_note = 0, None, None
     if reps > 1:
-        hist = _historical_best(sf_val)
-        pending = []
-        for name in list(timings):
-            reason = None
-            if medians[name] > 2 * timings[name] \
-                    and medians[name] - timings[name] > 0.25:
-                reason = (f"in-run spike: median {medians[name]} > "
-                          f"2x run min {timings[name]}")
-            else:
-                hb = hist.get(name)
-                if (hb and medians[name] > 1.5 * hb
-                        and medians[name] - hb > 0.25):
-                    reason = (f"cross-round drift: median "
-                              f"{medians[name]} > 1.5x best "
-                              f"historical {round(hb, 3)}")
-            if reason is not None:
-                pending.append((name, reason))
+        pending = [
+            (name, f"in-run spike: median {medians[name]} > "
+                   f"2x run min {timings[name]}")
+            for name in timings
+            if medians[name] > 2 * timings[name]
+            and medians[name] - timings[name] > 0.25
+        ]
         if pending:
             # Gate the recheck reps on a calm host, same rule as the
             # start gate: the recheck exists to REMOVE noise, but it

@@ -878,14 +878,14 @@ def semantic_dedup(df: DataFrame, vec_col: str = "embedding",
     included) closed-form and SQL-oracle-checkable; raise ``iters`` for
     real Lloyd refinement when exact reproducibility in SQL isn't needed.
     """
-    from .similarity import ivf_assign, train_centroids
+    from .similarity import _centroid_frame, ivf_assign, train_centroids
 
     spark = df.sparkSession
     cents = centroids or train_centroids(
         df, n_centroids=n_clusters, iters=iters,
         corpus_id=id_col, corpus_vec=vec_col,
     )
-    cdf = spark.createDataFrame(cents, ["centroid_id", "cvec"])
+    cdf = _centroid_frame(spark, cents)
     assigned = ivf_assign(df.select(id_col, vec_col), cdf, id_col, vec_col)
 
     # Pair search: ONE shuffle keyed by cluster co-locates each cluster,

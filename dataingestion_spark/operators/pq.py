@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from typing import List
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .similarity import _rank_topk
 
@@ -257,14 +257,14 @@ def topk_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 10,
     Deterministic end to end (farthest-first seeding, md5-free, IEEE
     subtraction), but k-means is iterative — rows-only oracle, like
     ``pq_train`` itself."""
-    from .similarity import cosine_sim, ivf_assign, train_centroids
+    from .similarity import _centroid_frame, _probe, ivf_assign, train_centroids
 
     spark = corpus.sparkSession
     base = corpus.select(corpus_id, corpus_vec)
     if centroids is None:
         centroids = train_centroids(base, n_centroids, iters, corpus_id,
                                     corpus_vec, init="farthest")
-    cents = spark.createDataFrame(centroids, ["centroid_id", "cvec"])
+    cents = _centroid_frame(spark, centroids)
     assigned = ivf_assign(base, cents, corpus_id, corpus_vec, max_list_size)
     if residual:
         # residual anchor = each list's EUCLIDEAN mean, not the cosine
@@ -299,66 +299,61 @@ def topk_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 10,
     encoded = pq_encode(assigned, codebooks, enc_vec).select(
         corpus_id, "centroid_id", "pq_code"
     )
-    probe_w = Window.partitionBy(query_id).orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn("csim", cosine_sim(F.col(query_vec), F.col("cvec")))
-        .withColumn("crk", F.row_number().over(probe_w))
-        .filter(F.col("crk") <= n_probe)
-        .select(query_id, "centroid_id")
-    )
-    if residual:
-        # one LUT per (query, probed list) over the query RESIDUAL q − a:
-        # ADC then approximates ‖(q−a) − (x−a)‖² = ‖q − x‖² list-locally,
-        # with a = the probed list's Euclidean-mean anchor
-        cmap = {r["centroid_id"]: list(r["_anchor"])
-                for r in anchors.collect()}
-        prows = probes.collect()
-        qvecs = {r[0]: list(r[1]) for r in
-                 queries.select(query_id, query_vec).collect()}
-        from pyspark.sql import types as T
-
-        id_type = queries.schema[query_id].dataType
-        qres_rows = []
-        for r in prows:
-            qv, cv = qvecs[r[0]], cmap[r[1]]
-            qres_rows.append((r[0], int(r[1]),
-                              [a - b for a, b in zip(qv, cv)]))
-        qres = spark.createDataFrame(
-            qres_rows,
-            T.StructType([
-                T.StructField(query_id, id_type),
-                T.StructField("centroid_id", T.IntegerType()),
-                T.StructField("_qr", T.ArrayType(T.DoubleType())),
-            ]),
-        )
-        # reuse _adc_lut_df per composite key via a synthetic id column
-        qres_k = qres.withColumn(
-            "_qc", F.concat_ws("#", F.col(query_id).cast("string"),
-                               F.col("centroid_id").cast("string"))
-        )
-        lut_tbl = _adc_lut_df(
-            qres_k.select("_qc", "_qr"), codebooks, "_qc", "_qr"
-        )
-        probe_lut = qres_k.select(query_id, "centroid_id", "_qc").join(
-            lut_tbl, "_qc"
-        ).drop("_qc")
-        scored = encoded.join(
-            F.broadcast(probe_lut), "centroid_id"
-        ).select(
-            F.col(query_id), F.col(corpus_id),
-            (-_adc_total(len(codebooks), "pq_code")).alias("score"),
-        )
-    else:
+    probes = _probe(queries, cents, n_probe, query_id, query_vec).select(
+        query_id, "centroid_id")
+    if not residual:
         qluts = _adc_lut_df(queries, codebooks, query_id, query_vec)
-        scored = encoded.join(
-            F.broadcast(probes.join(F.broadcast(qluts), query_id)), "centroid_id"
-        ).select(
-            F.col(query_id), F.col(corpus_id),
-            (-_adc_total(len(codebooks), "pq_code")).alias("score"),
-        )
+        return _adc_score_lists(encoded, probes, qluts, query_id,
+                                len(codebooks), k, query_id, corpus_id)
+    # one LUT per (query, probed list) over the query RESIDUAL q − a:
+    # ADC then approximates ‖(q−a) − (x−a)‖² = ‖q − x‖² list-locally,
+    # with a = the probed list's Euclidean-mean anchor
+    cmap = {r["centroid_id"]: list(r["_anchor"])
+            for r in anchors.collect()}
+    prows = probes.collect()
+    qvecs = {r[0]: list(r[1]) for r in
+             queries.select(query_id, query_vec).collect()}
+    from pyspark.sql import types as T
+
+    id_type = queries.schema[query_id].dataType
+    qres_rows = []
+    for r in prows:
+        qv, cv = qvecs[r[0]], cmap[r[1]]
+        qres_rows.append((r[0], int(r[1]),
+                          [a - b for a, b in zip(qv, cv)]))
+    qres = spark.createDataFrame(
+        qres_rows,
+        T.StructType([
+            T.StructField(query_id, id_type),
+            T.StructField("centroid_id", T.IntegerType()),
+            T.StructField("_qr", T.ArrayType(T.DoubleType())),
+        ]),
+    )
+    # reuse _adc_lut_df per composite key via a synthetic id column
+    qres_k = qres.withColumn(
+        "_qc", F.concat_ws("#", F.col(query_id).cast("string"),
+                           F.col("centroid_id").cast("string"))
+    )
+    lut_tbl = _adc_lut_df(
+        qres_k.select("_qc", "_qr"), codebooks, "_qc", "_qr"
+    )
+    return _adc_score_lists(
+        encoded, qres_k.select(query_id, "centroid_id", "_qc"), lut_tbl,
+        "_qc", len(codebooks), k, query_id, corpus_id)
+
+
+def _adc_score_lists(lists: DataFrame, probes: DataFrame, luts: DataFrame,
+                     on: str, m: int, k: int, query_id: str,
+                     corpus_id: str) -> DataFrame:
+    """ADC top-k over inverted lists: each probe row meets its LUT on
+    ``on``, and that (tiny) probe×LUT table broadcasts against the
+    ``(corpus_id, centroid_id, pq_code)`` rows, so a query scores only
+    the lists it probed — m lookups per candidate, no float vector."""
+    probe_luts = probes.join(F.broadcast(luts), on)
+    scored = lists.join(F.broadcast(probe_luts), "centroid_id").select(
+        F.col(query_id), F.col(corpus_id),
+        (-_adc_total(m, "pq_code")).alias("score"),
+    )
     return _rank_topk(scored, k, query_id, corpus_id)
 
 

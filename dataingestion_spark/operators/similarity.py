@@ -321,9 +321,7 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
                                           n_centroids, n).select("cvec").collect()
         cents = [list(map(float, r[0])) for r in cent_rows]
     for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [(i + 1, v) for i, v in enumerate(cents)], ["centroid_id", "cvec"]
-        )
+        cdf = _centroid_frame(spark, enumerate(cents, 1))
         assigned = _lloyd_assign(corpus, cdf, corpus_id, corpus_vec)
         dim = len(cents[0])
         means = assigned.groupBy("centroid_id").agg(
@@ -425,28 +423,54 @@ def topk_cosine_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
     cascade), so a list that is simultaneously popular as rank-1 AND as
     everyone's runner-up can still exceed the cap — pathological with
     trained centroids, which is what :func:`train_centroids` is for."""
-    if centroids is not None:
-        cents = corpus.sparkSession.createDataFrame(
-            centroids, ["centroid_id", "cvec"]
-        )
-    else:
-        n = corpus.count()
-        # materialize the C-row centroid frame ONCE: it is broadcast in
-        # two places below (list assignment and query probing), and its
-        # plan — a distributed prefix sum + global sort + limit — would
-        # otherwise execute once per broadcast build
-        cents = _stride_centroid_rows(corpus, corpus_id, corpus_vec,
-                                      n_centroids, n).localCheckpoint(eager=True)
+    if centroids is None:
+        # the C-row stride sample is driver-sized and broadcast twice
+        # below (list assignment and query probing): collect it once
+        # instead of re-running its prefix-sum plan per broadcast build
+        centroids = _stride_centroid_rows(
+            corpus, corpus_id, corpus_vec, n_centroids, corpus.count()
+        ).collect()
+    cents = _centroid_frame(corpus.sparkSession, centroids)
     assigned = ivf_assign(corpus, cents, corpus_id, corpus_vec, max_list_size)
-    probe_w = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("centroid_id"))
-    probes = (
+    probes = _probe(queries, cents, n_probe, query_id, query_vec)
+    return _score_lists(assigned, probes, k, corpus_id, corpus_vec,
+                        query_id, query_vec)
+
+
+def _centroid_frame(spark, centroids: list) -> DataFrame:
+    """The one way centroids enter a plan: a driver list of ``(id,
+    vector)`` becomes the broadcastable ``(centroid_id, cvec)`` frame.
+    Ids go through ``int()`` so a non-numeric id fails here, loudly —
+    the probe and assignment tie-breaks order (and negate) them."""
+    return spark.createDataFrame(
+        [(int(c), [float(x) for x in v]) for c, v in centroids],
+        ["centroid_id", "cvec"])
+
+
+def _probe(queries: DataFrame, cents: DataFrame, n_probe: int,
+           query_id: str, query_vec: str) -> DataFrame:
+    """The probe step: each query's ``n_probe`` nearest lists, as
+    ``(query_id, query_vec, centroid_id)`` — one row per probed list,
+    ties to the smaller centroid id."""
+    probe_w = Window.partitionBy(query_id).orderBy(
+        F.desc("csim"), F.asc("centroid_id")
+    )
+    return (
         queries.crossJoin(F.broadcast(cents))
         .withColumn("csim", cosine_sim(F.col(query_vec), F.col("cvec")))
         .withColumn("crk", F.row_number().over(probe_w))
         .filter(F.col("crk") <= n_probe)
         .select(query_id, query_vec, "centroid_id")
     )
-    scored = assigned.join(F.broadcast(probes), "centroid_id").select(
+
+
+def _score_lists(lists: DataFrame, probes: DataFrame, k: int,
+                 corpus_id: str, corpus_vec: str,
+                 query_id: str, query_vec: str) -> DataFrame:
+    """Cosine top-k over inverted lists: every ``(corpus_id, corpus_vec,
+    centroid_id)`` row meets the broadcast probes of its list, so a
+    query scores only the lists it probed."""
+    scored = lists.join(F.broadcast(probes), "centroid_id").select(
         F.col(query_id),
         F.col(corpus_id),
         cosine_sim(F.col(corpus_vec), F.col(query_vec)).alias("score"),

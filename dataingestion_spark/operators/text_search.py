@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..partitioning import fan_out
 
@@ -56,17 +56,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, text_col: str = "text",
     (plans/r15/ab_fanout_sites.txt), confirming the r14 driver's
     bm25_hybrid 0.82× regression.
     """
-    words = F.split(F.trim(F.col(text_col)), _WS)
-    doclens = docs.select(F.col(id_col), F.size(words).alias("dl"))
-    stats = doclens.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    qterms = queries.select(
-        F.col(query_id_col),
-        F.explode(
-            F.array_distinct(F.split(F.trim(F.col(query_text_col)), _WS))
-        ).alias("term"),
-    )
+    words = _tokens(text_col)
+    qterms = _query_terms(queries, query_id_col, query_text_col)
     # Filter exploded tokens against the (broadcast) query-term set BEFORE
     # the tf groupBy: the shuffle then carries only query-term postings, not
     # the corpus-wide vocabulary — the difference between O(total tokens)
@@ -76,6 +67,34 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, text_col: str = "text",
         .join(F.broadcast(qterms.select("term").distinct()), "term")
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
+    )
+    doclens = docs.select(F.col(id_col), F.size(words).alias("dl"))
+    return _bm25_rank(rel, qterms, doclens, k, k1, b, id_col, query_id_col)
+
+
+def _tokens(text_col: str) -> Column:
+    return F.split(F.trim(F.col(text_col)), _WS)
+
+
+def _query_terms(queries: DataFrame, query_id_col: str,
+                 query_text_col: str) -> DataFrame:
+    """``(query_id, term)``: each query's distinct whitespace terms."""
+    return queries.select(
+        F.col(query_id_col),
+        F.explode(F.array_distinct(_tokens(query_text_col))).alias("term"),
+    )
+
+
+def _bm25_rank(rel: DataFrame, qterms: DataFrame, doclens: DataFrame,
+               k: int, k1: float, b: float, id_col: str,
+               query_id_col: str) -> DataFrame:
+    """The BM25 scorer behind :func:`bm25_topk` and the persisted text
+    index: ``rel(id, term, tf)`` holds the query terms' postings,
+    ``qterms(query_id, term)`` the queries, and ``doclens(id, dl)`` every
+    document of the corpus (N and avgdl come from it). Both callers
+    score through this one expression, so they agree bit for bit."""
+    stats = doclens.agg(
+        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     dfreq = rel.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
@@ -140,10 +159,9 @@ def positional_postings(docs: DataFrame, text_col: str = "text",
     positions postings); build once, reuse across queries. Scale: one
     explode, partitioned by whatever the downstream join keys on (term
     for search — write it bucketed by term at 100 TB)."""
-    words = F.split(F.trim(F.col(text_col)), _WS)
     return docs.select(
         F.col(id_col),
-        F.posexplode(words).alias("pos", "term"),
+        F.posexplode(_tokens(text_col)).alias("pos", "term"),
     ).filter(F.col("term") != "")
 
 

@@ -29,11 +29,79 @@ import json
 import os
 from typing import List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.similarity import cosine_sim, ivf_assign, train_centroids
+from ..operators.similarity import (
+    _centroid_frame, _probe, _score_lists, ivf_assign, train_centroids,
+)
 
 Centroid = Tuple[int, List[float]]
+
+
+def _write_lists(lists: DataFrame, dest: str, mode: str) -> None:
+    """The one list writer: co-locate each inverted list, then write one
+    ``centroid_id=<c>`` directory per list under ``dest``."""
+    (lists.repartition("centroid_id")
+     .write.mode(mode).partitionBy("centroid_id").parquet(dest))
+
+
+def _put_json(path: str, name: str, obj) -> None:
+    from .commit_backend import backend_for
+
+    backend_for(path).put_atomic(f"{path.rstrip('/')}/{name}", json.dumps(obj))
+
+
+def _get_json(path: str, name: str):
+    from .commit_backend import backend_for
+
+    text = backend_for(path).read_text(f"{path.rstrip('/')}/{name}")
+    if text is None:
+        raise FileNotFoundError(f"no {name} under {path}")
+    return json.loads(text)
+
+
+def _write_index(vectors: DataFrame, path: str, mode: str,
+                 cents: List[Centroid], codebooks, corpus_id: str,
+                 corpus_vec: str, max_list_size: Optional[int] = None) -> None:
+    """Assign ``vectors`` to ``cents`` (and with ``codebooks`` PQ-encode
+    them down to ``(corpus_id, centroid_id, pq_code)``), then write the
+    list rows. A build (``mode="overwrite"``) also writes the sidecars;
+    an append reuses the stored ones."""
+    lists = ivf_assign(vectors, _centroid_frame(vectors.sparkSession, cents),
+                       corpus_id, corpus_vec, max_list_size)
+    if codebooks is not None:
+        from ..operators.pq import pq_encode
+
+        lists = pq_encode(lists, codebooks, corpus_vec).select(
+            corpus_id, "centroid_id", "pq_code")
+    _write_lists(lists, os.path.join(path, "lists"), mode)
+    if mode == "overwrite":
+        _put_json(path, "centroids.json",
+                  [[int(c), list(map(float, v))] for c, v in cents])
+        if codebooks is not None:
+            _put_json(path, "codebooks.json",
+                      [[[float(x) for x in cw] for cw in book]
+                       for book in codebooks])
+
+
+def _probed_lists(spark: SparkSession, path: str, queries: DataFrame,
+                  n_probe: int, query_id: str, query_vec: str,
+                  keep_vec: bool):
+    """``(probes, lists)``: each query's probed lists, and the ``lists/``
+    scan pruned to them. The probes are checkpointed because they feed
+    both the collect of their ids and the scoring join; the ids become a
+    literal ``centroid_id IN (…)`` filter, which prunes at file listing
+    (Spark's dynamic partition pruning does not: its runtime filter
+    folds to true in the final adaptive plan and every list is read)."""
+    probes = _probe(queries, _centroid_frame(spark, load_centroids(path)),
+                    n_probe, query_id, query_vec)
+    if not keep_vec:
+        probes = probes.select(query_id, "centroid_id")
+    probes = probes.localCheckpoint(eager=True)
+    probe_ids = sorted({int(r[0]) for r in probes.select("centroid_id").collect()})
+    lists = (spark.read.parquet(os.path.join(path, "lists"))
+             .filter(F.col("centroid_id").isin(probe_ids)))
+    return probes, lists
 
 
 def build_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
@@ -47,28 +115,14 @@ def build_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
         corpus, n_centroids=n_centroids, iters=iters,
         corpus_id=corpus_id, corpus_vec=corpus_vec,
     )
-    cdf = corpus.sparkSession.createDataFrame(cents, ["centroid_id", "cvec"])
-    assigned = ivf_assign(corpus, cdf, corpus_id, corpus_vec, max_list_size)
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(os.path.join(path, "lists"))
-    )
-    from .commit_backend import backend_for
-
-    backend_for(path).put_atomic(
-        f"{path.rstrip('/')}/centroids.json",
-        json.dumps([[int(c), list(map(float, v))] for c, v in cents]))
+    _write_index(corpus, path, "overwrite", cents, None, corpus_id,
+                 corpus_vec, max_list_size)
     return len(cents)
 
 
 def load_centroids(path: str) -> List[Centroid]:
-    from .commit_backend import backend_for
-
-    text = backend_for(path).read_text(f"{path.rstrip('/')}/centroids.json")
-    if text is None:
-        raise FileNotFoundError(f"no centroids.json under {path}")
-    return [(int(c), [float(x) for x in v]) for c, v in json.loads(text)]
+    return [(int(c), [float(x) for x in v])
+            for c, v in _get_json(path, "centroids.json")]
 
 
 def search_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
@@ -80,8 +134,9 @@ def search_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
     """Top-k over the persisted index: pick each query's ``n_probe``
     nearest centroids, then scan ONLY those list partitions (the
     ``centroid_id`` filter prunes at the file-listing level). Output:
-    (query_id, rank, corpus_id, score) — identical to
-    ``topk_cosine_ivf`` with the same centroids and probes.
+    (query_id, rank, corpus_id, score). The probe step and the list
+    scorer are ``topk_cosine_ivf``'s own, so with the same centroids
+    the results are identical.
 
     ``allowed`` (a one-column frame of permitted ``corpus_id`` values —
     e.g. the ids passing a metadata predicate on the source table)
@@ -90,28 +145,8 @@ def search_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
     (Milvus/pgvector). A selective filter thins candidate lists, so
     raise ``n_probe`` to hold recall — with all centroids probed the
     result is exactly the filtered exact top-k."""
-    from ..operators.similarity import _rank_topk
-
-    cents = load_centroids(path)
-    cdf = spark.createDataFrame(cents, ["centroid_id", "cvec"])
-    probe_w = Window.partitionBy(query_id).orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cdf))
-        .withColumn("csim", cosine_sim(F.col(query_vec), F.col("cvec")))
-        .withColumn("crk", F.row_number().over(probe_w))
-        .filter(F.col("crk") <= n_probe)
-        .select(query_id, query_vec, "centroid_id")
-        .localCheckpoint(eager=True)  # reused for pruning ids AND the join
-    )
-    probe_ids = sorted(
-        {int(r[0]) for r in probes.select("centroid_id").distinct().collect()}
-    )
-    lists = (
-        spark.read.parquet(os.path.join(path, "lists"))
-        .filter(F.col("centroid_id").isin(probe_ids))
-    )
+    probes, lists = _probed_lists(spark, path, queries, n_probe,
+                                  query_id, query_vec, keep_vec=True)
     if allowed is not None:
         # no broadcast hint: the allowed set can be anywhere from a
         # handful of ids to most of the corpus — AQE picks the join
@@ -119,12 +154,8 @@ def search_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
         lists = lists.join(
             allowed.withColumnRenamed(allowed.columns[0], corpus_id),
             corpus_id, "semi")
-    scored = lists.join(F.broadcast(probes), "centroid_id").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        cosine_sim(F.col(corpus_vec), F.col(query_vec)).alias("score"),
-    )
-    return _rank_topk(scored, k, query_id, corpus_id)
+    return _score_lists(lists, probes, k, corpus_id, corpus_vec,
+                        query_id, query_vec)
 
 
 def append_ivf_index(new_vectors: DataFrame, path: str,
@@ -137,17 +168,8 @@ def append_ivf_index(new_vectors: DataFrame, path: str,
     of appends equals searching an index built from the union in one
     shot (pinned in tests). Rebuild when drift degrades recall (track it
     with ``operators/similarity.recall_at_k`` on a probe query set)."""
-    spark = new_vectors.sparkSession
-    cents = load_centroids(path)
-    cdf = spark.createDataFrame(cents, ["centroid_id", "cvec"])
-    assigned = ivf_assign(
-        new_vectors.select(corpus_id, corpus_vec), cdf, corpus_id, corpus_vec
-    )
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(os.path.join(path, "lists"))
-    )
+    _write_index(new_vectors.select(corpus_id, corpus_vec), path, "append",
+                 load_centroids(path), None, corpus_id, corpus_vec)
 
 
 # ---------------------------------------------------------------------------
@@ -182,7 +204,7 @@ def build_ivfpq_index(corpus: DataFrame, path: str, n_centroids: int = 16,
         <path>/codebooks.json   [m][k_codes][dim/m] floats
         <path>/lists/centroid_id=<c>/part-*.parquet   (vec_id, pq_code)
     """
-    from ..operators.pq import pq_encode, pq_train
+    from ..operators.pq import pq_train
 
     cents = centroids or train_centroids(
         corpus, n_centroids=n_centroids, iters=iters,
@@ -191,37 +213,13 @@ def build_ivfpq_index(corpus: DataFrame, path: str, n_centroids: int = 16,
     if codebooks is None:
         codebooks = pq_train(corpus, m=m, k=k_codes, iters=pq_iters,
                              corpus_id=corpus_id, corpus_vec=corpus_vec)
-    cdf = corpus.sparkSession.createDataFrame(cents, ["centroid_id", "cvec"])
-    assigned = ivf_assign(corpus.select(corpus_id, corpus_vec), cdf,
-                          corpus_id, corpus_vec, max_list_size)
-    encoded = pq_encode(assigned, codebooks, corpus_vec).select(
-        corpus_id, "centroid_id", "pq_code"
-    )
-    (
-        encoded.repartition("centroid_id")
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(os.path.join(path, "lists"))
-    )
-    from .commit_backend import backend_for
-
-    be = backend_for(path)
-    be.put_atomic(
-        f"{path.rstrip('/')}/centroids.json",
-        json.dumps([[int(c), list(map(float, v))] for c, v in cents]))
-    be.put_atomic(
-        f"{path.rstrip('/')}/codebooks.json",
-        json.dumps([[[float(x) for x in cw] for cw in book]
-                    for book in codebooks]))
+    _write_index(corpus.select(corpus_id, corpus_vec), path, "overwrite",
+                 cents, codebooks, corpus_id, corpus_vec, max_list_size)
     return len(cents)
 
 
 def load_ivfpq_codebooks(path: str):
-    from .commit_backend import backend_for
-
-    text = backend_for(path).read_text(f"{path.rstrip('/')}/codebooks.json")
-    if text is None:
-        raise FileNotFoundError(f"no codebooks.json under {path}")
-    return json.loads(text)
+    return _get_json(path, "codebooks.json")
 
 
 def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
@@ -231,41 +229,17 @@ def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
                        query_vec: str = "query_vec") -> DataFrame:
     """ADC top-k over the persisted lists: probe selection against the
     sidecar centroids (driver-sized), partition pruning down to the
-    probed lists, then the broadcast probe×LUT equi-join — identical
-    scoring to ``operators.pq.topk_ivf_pq(residual=False)`` with the
-    same centroids/codebooks (pinned in tests)."""
-    from ..operators.pq import _adc_lut_df, _adc_total
-    from ..operators.similarity import _rank_topk
+    probed lists, then the broadcast probe×LUT equi-join — the probe
+    step and ADC scorer of ``operators.pq.topk_ivf_pq(residual=False)``,
+    so the same centroids/codebooks give identical results."""
+    from ..operators.pq import _adc_lut_df, _adc_score_lists
 
-    cents = load_centroids(path)
     codebooks = load_ivfpq_codebooks(path)
-    cdf = spark.createDataFrame(cents, ["centroid_id", "cvec"])
-    probe_w = Window.partitionBy(query_id).orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cdf))
-        .withColumn("csim", cosine_sim(F.col(query_vec), F.col("cvec")))
-        .withColumn("crk", F.row_number().over(probe_w))
-        .filter(F.col("crk") <= n_probe)
-        .select(query_id, "centroid_id")
-        .localCheckpoint(eager=True)  # reused for pruning ids AND the join
-    )
-    probe_ids = sorted(
-        {int(r[0]) for r in probes.select("centroid_id").distinct().collect()}
-    )
-    lists = (
-        spark.read.parquet(os.path.join(path, "lists"))
-        .filter(F.col("centroid_id").isin(probe_ids))
-    )
+    probes, lists = _probed_lists(spark, path, queries, n_probe,
+                                  query_id, query_vec, keep_vec=False)
     qluts = _adc_lut_df(queries, codebooks, query_id, query_vec)
-    scored = lists.join(
-        F.broadcast(probes.join(F.broadcast(qluts), query_id)), "centroid_id"
-    ).select(
-        F.col(query_id), F.col(corpus_id),
-        (-_adc_total(len(codebooks), "pq_code")).alias("score"),
-    )
-    return _rank_topk(scored, k, query_id, corpus_id)
+    return _adc_score_lists(lists, probes, qluts, query_id, len(codebooks),
+                            k, query_id, corpus_id)
 
 
 def append_ivfpq_index(new_vectors: DataFrame, path: str,
@@ -277,23 +251,9 @@ def append_ivfpq_index(new_vectors: DataFrame, path: str,
     index skips residual encoding), append to the affected partitions.
     Search-after-append equals search of a one-shot build (pinned in
     tests); rebuild when drift degrades recall."""
-    from ..operators.pq import pq_encode
-
-    spark = new_vectors.sparkSession
-    cents = load_centroids(path)
-    codebooks = load_ivfpq_codebooks(path)
-    cdf = spark.createDataFrame(cents, ["centroid_id", "cvec"])
-    assigned = ivf_assign(
-        new_vectors.select(corpus_id, corpus_vec), cdf, corpus_id, corpus_vec
-    )
-    encoded = pq_encode(assigned, codebooks, corpus_vec).select(
-        corpus_id, "centroid_id", "pq_code"
-    )
-    (
-        encoded.repartition("centroid_id")
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(os.path.join(path, "lists"))
-    )
+    _write_index(new_vectors.select(corpus_id, corpus_vec), path, "append",
+                 load_centroids(path), load_ivfpq_codebooks(path),
+                 corpus_id, corpus_vec)
 
 
 def compact_index_lists(spark: SparkSession, path: str,
@@ -328,12 +288,8 @@ def compact_index_lists(spark: SparkSession, path: str,
             over += 1
     if not over:
         return 0
-    df = spark.read.parquet(lists_dir)
     tmp = f"{lists_dir}.__staging__{_uuid.uuid4().hex[:8]}"
-    (
-        df.repartition("centroid_id")
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
-    )
+    _write_lists(spark.read.parquet(lists_dir), tmp, "overwrite")
     old = f"{lists_dir}.__old__{_uuid.uuid4().hex[:8]}"
     os.rename(lists_dir, old)
     os.rename(tmp, lists_dir)

@@ -42,14 +42,15 @@ def fake_embedding(col: Column, dims: int = 8) -> Column:
     of the reference tests' fixed-vector TestEmbeddingGenerator
     (``test/.../Utils/TestEmbeddingGenerator.cs:12-28``) — but content-
     sensitive, engine-reproducible, and computed JVM-side."""
-    def byte_at(d):
-        h = F.md5(F.concat(col, F.lit(f":{d}")))
-        hv = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1  # noqa: E731
-        # k/256 is exactly representable in float32 AND float64, so the
-        # stored vector survives float→double round-trips bit-for-bit.
-        return (hv(1) * 16 + hv(2)).cast("double") / 256.0
-
-    return F.array(*[byte_at(d).cast("float") for d in range(dims)])
+    # one higher-order expression, whatever ``dims`` is: building it
+    # element by element costs a py4j round trip per Column node.
+    # k/256 is exactly representable in float32 AND float64, so the
+    # stored vector survives float→double round-trips bit-for-bit.
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(dims - 1)),
+        lambda d: (F.conv(F.substring(
+            F.md5(F.concat(col, F.lit(":"), d.cast("string"))), 1, 2), 16, 10)
+            .cast("double") / 256.0).cast("float"))
 
 
 def build_vector_records(chunks_df: DataFrame,

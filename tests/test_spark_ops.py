@@ -178,6 +178,25 @@ def test_search_self_match(spark, tmp_path):
     assert dot[0]["documentid"] == "x"
 
 
+@pytest.mark.parametrize("dims", [4, 8, 384])
+def test_fake_embedding_matches_md5_recomputation(spark, dims):
+    """Dimension d is byte 0 of md5(content ':' d), over 256, as float."""
+    import hashlib
+
+    import numpy as np
+
+    from dataingestion_spark.sinks.vector_store import fake_embedding
+
+    texts = [f"text {i}" for i in range(50)] + ["", "ünïcödé ✓"]
+    df = spark.createDataFrame([(t,) for t in texts], "content string")
+    out = df.select("content", fake_embedding(F.col("content"), dims=dims).alias("e"))
+    assert out.schema["e"].dataType.simpleString() == "array<float>"
+    for r in out.collect():
+        want = [float(np.float32(hashlib.md5(f"{r.content}:{d}".encode()).digest()[0] / 256))
+                for d in range(dims)]
+        assert r.e == want, r.content
+
+
 def test_token_chunk_text_no_trailing_loss(spark):
     # n ≡ 1 (mod stride) with overlap 0 must still cover the last token
     text = " ".join(f"w{i}" for i in range(65))
@@ -333,6 +352,17 @@ def test_ivf_trained_centroids(spark):
         (F.col("rank") == 1) & (F.col("vec_id") == F.col("query_id"))
     ).count()
     assert self_hits == 3
+
+
+def test_ivf_rejects_non_numeric_centroid_ids(spark):
+    from dataingestion_spark.operators.similarity import topk_cosine_ivf
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.limit(1).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    cents = [("north", [1.0] * 64), ("south", [-1.0] * 64)]
+    with pytest.raises(ValueError):
+        topk_cosine_ivf(emb, queries, k=5, n_probe=1, centroids=cents)
 
 
 def test_entry_contract(spark):

@@ -1,7 +1,11 @@
 """Persisted inverted text index (sinks/text_index.py)."""
 
-import re
+import os
+import shutil
+import time
+import zlib
 
+import pytest
 from pyspark.sql import Row
 
 from dataingestion_spark.operators.text_search import bm25_topk
@@ -55,12 +59,20 @@ def test_append_equals_rebuild(spark, tmp_path):
 
 
 def test_term_selection_prunes_partitions(spark, tmp_path):
+    from tests.test_vector_index import executed_scans, partition_literals
+
     path = str(tmp_path / "p")
     write_text_index(_docs(spark), path)
-    out = search_text_index(spark, path, _queries(spark).limit(1), k=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "tb" in m.group(1)  # bucket pruning reaches the scan
+    qid, text = QUERIES[0]
+    q = spark.createDataFrame([Row(query_id=qid, query_text=text)])
+    out = search_text_index(spark, path, q, k=3)
+    out.collect()
+    buckets = {zlib.crc32(t.encode()) % 64 for t in text.split()}
+    on_disk = [d for d in os.listdir(os.path.join(path, "postings"))
+               if d.startswith("tb=")]
+    for filters, _, n_read in executed_scans(out, "postings"):
+        assert partition_literals(filters, "tb") == buckets, filters
+        assert n_read == len(buckets) < len(on_disk)
 
 
 def test_unknown_terms_return_empty(spark, tmp_path):
@@ -68,6 +80,28 @@ def test_unknown_terms_return_empty(spark, tmp_path):
     write_text_index(_docs(spark), path)
     q = spark.createDataFrame([Row(query_id=1, query_text="zzz qqq")])
     assert search_text_index(spark, path, q, k=3).count() == 0
+
+
+def _hybrid_indexes(spark, tmp_path):
+    """A text index and a 2-list IVF index over DOCS, plus vector queries."""
+    from pyspark.sql import functions as F
+
+    from dataingestion_spark.sinks.vector_index import build_ivf_index
+
+    # tiny deterministic embeddings keyed like the docs
+    emb = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[float((i * 7 + j * 3) % 5) - 2.0
+                                  for j in range(4)])
+         for i, _ in DOCS])
+    tpath = str(tmp_path / "tidx")
+    vpath = str(tmp_path / "vidx")
+    write_text_index(_docs(spark), tpath)
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [-1.0, 0.5, 0.0, 0.0])]
+    build_ivf_index(emb, vpath, centroids=cents)
+    vq = emb.filter(F.col("vec_id") <= 2).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    return emb, tpath, vpath, vq, len(cents)
 
 
 def test_hybrid_indexed_equals_from_scratch(spark, tmp_path):
@@ -78,28 +112,59 @@ def test_hybrid_indexed_equals_from_scratch(spark, tmp_path):
     from dataingestion_spark.operators.similarity import topk_cosine
     from dataingestion_spark.operators.text_search import rrf_fuse
     from dataingestion_spark.sinks.text_index import hybrid_search_indexed
-    from dataingestion_spark.sinks.vector_index import build_ivf_index
 
-    docs = _docs(spark)
-    # tiny deterministic embeddings keyed like the docs
-    emb = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float((i * 7 + j * 3) % 5) - 2.0
-                                  for j in range(4)])
-         for i, _ in DOCS])
-    tpath = str(tmp_path / "tidx")
-    vpath = str(tmp_path / "vidx")
-    write_text_index(docs, tpath)
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [-1.0, 0.5, 0.0, 0.0])]
-    build_ivf_index(emb, vpath, centroids=cents)
-    vq = emb.filter(F.col("vec_id") <= 2).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"))
-
+    emb, tpath, vpath, vq, n_cents = _hybrid_indexes(spark, tmp_path)
     got = hybrid_search_indexed(spark, tpath, vpath, _queries(spark), vq,
-                                k=5, per_side_k=4, n_probe=len(cents))
-    bm = bm25_topk(docs, _queries(spark), k=4)
+                                k=5, per_side_k=4, n_probe=n_cents)
+    bm = bm25_topk(_docs(spark), _queries(spark), k=4)
     cos = topk_cosine(emb, vq, k=4).select(
         "query_id", F.col("vec_id").alias("doc_id"), "rank")
     want = rrf_fuse(bm, cos, k=5)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
+
+
+def test_hybrid_jobs_run_in_callers_job_group(spark, tmp_path):
+    """Both sides are built on pool threads, yet every job of the query
+    — side preps included — belongs to the caller's job group."""
+    from dataingestion_spark.sinks.text_index import hybrid_search_indexed
+
+    _, tpath, vpath, vq, n_cents = _hybrid_indexes(spark, tmp_path)
+    sc = spark.sparkContext
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("hybrid-query", "one hybrid query")
+    try:
+        hybrid_search_indexed(spark, tpath, vpath, _queries(spark), vq,
+                              k=5, per_side_k=4, n_probe=n_cents).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    drain()
+    grouped = sc.statusTracker().getJobIdsForGroup("hybrid-query")
+    assert len(grouped) > 2  # the preps of both sides, and the query
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+
+
+def test_hybrid_missing_doclens_raises(spark, tmp_path):
+    from dataingestion_spark.sinks.text_index import hybrid_search_indexed
+
+    _, tpath, vpath, vq, n_cents = _hybrid_indexes(spark, tmp_path)
+    shutil.rmtree(os.path.join(tpath, "doclens"))
+    with pytest.raises(Exception, match="doclens"):
+        hybrid_search_indexed(spark, tpath, vpath, _queries(spark), vq,
+                              k=5, per_side_k=4, n_probe=n_cents)
+
+
+def test_run_concurrently_raises_first_failure_without_waiting(spark):
+    from dataingestion_spark.sinks.text_index import _run_concurrently
+
+    assert _run_concurrently(spark, lambda: 1, lambda: 2) == [1, 2]
+
+    def boom():
+        raise ValueError("boom")
+
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="boom"):
+        _run_concurrently(spark, lambda: time.sleep(5), boom)
+    assert time.perf_counter() - t0 < 4

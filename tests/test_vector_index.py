@@ -1,5 +1,6 @@
 """Persisted IVF index (sinks/vector_index.py)."""
 
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -30,16 +31,75 @@ def test_search_equals_in_memory_ivf(spark, tmp_path):
             == {(r.query_id, r.rank, r.vec_id) for r in want.collect()})
 
 
+def executed_scans(df, dirname):
+    """After an action on ``df``: each executed parquet scan of the
+    ``dirname`` directory, as (its partition filters, its read columns,
+    its numPartitions metric — the partition directories it read)."""
+    def walk(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(p.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            yield from walk(p.plan())
+        else:
+            yield p
+            kids = p.children()
+            for i in range(kids.size()):
+                yield from walk(kids.apply(i))
+
+    scans = [n for n in walk(df._jdf.queryExecution().executedPlan())
+             if n.getClass().getSimpleName() == "FileSourceScanExec"
+             and n.relation().location().rootPaths().head().getName() == dirname]
+    assert scans, f"no scan of {dirname}"
+    return [(n.partitionFilters().mkString(", "),
+             list(n.requiredSchema().fieldNames()),
+             n.metrics().apply("numPartitions").value()) for n in scans]
+
+
+def partition_literals(filters, col):
+    """The values of the literal ``col IN (…)`` / ``col = v`` partition
+    filter (empty when there is none)."""
+    m = re.search(rf"{col}#\d+ IN \(([^)]*)\)", filters) \
+        or re.search(rf"{col}#\d+ = (\d+)", filters)
+    return {int(v) for v in m.group(1).split(",")} if m else set()
+
+
+def nearest_centroids(cents, qvec, n_probe):
+    """Ids of the ``n_probe`` centroids most cosine-similar to ``qvec``."""
+    import numpy as np
+
+    q = np.asarray(qvec, dtype=float)
+
+    def cos(v):
+        v = np.asarray(v, dtype=float)
+        return float(q @ v / (np.linalg.norm(q) * np.linalg.norm(v)))
+
+    return {c for _, c in sorted((-cos(v), c) for c, v in cents)[:n_probe]}
+
+
+def assert_reads_only_probed_lists(got, path, cents, qvec, n_probe):
+    got.collect()
+    probed = nearest_centroids(cents, qvec, n_probe)
+    on_disk = {int(d.split("=")[1]) for d in os.listdir(os.path.join(path, "lists"))
+               if d.startswith("centroid_id=")}
+    for filters, _, n_read in executed_scans(got, "lists"):
+        assert partition_literals(filters, "centroid_id") == probed, filters
+        assert n_read == len(probed & on_disk) < len(on_disk)
+
+
 def test_probe_prunes_partitions(spark, tmp_path):
     e, cents, path = setup_index(spark, tmp_path)
     qs = e.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    got = search_ivf_index(spark, path, qs, k=5, n_probe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "centroid_id" in m.group(1)  # pruning reaches the scan
-    got.collect()
+    qvec = qs.first().query_vec
+    assert_reads_only_probed_lists(
+        search_ivf_index(spark, path, qs, k=5, n_probe=2),
+        path, cents, qvec, 2)
+    allowed = e.filter(F.col("vec_id") % 2 == 0).select("vec_id")
+    assert_reads_only_probed_lists(
+        search_ivf_index(spark, path, qs, k=5, n_probe=2, allowed=allowed),
+        path, cents, qvec, 2)
 
 
 def test_centroids_roundtrip(spark, tmp_path):
@@ -112,14 +172,11 @@ def test_ivfpq_probe_prunes_partitions_and_reads_no_vectors(spark, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     got = search_ivfpq_index(spark, path, qs, k=5, n_probe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "centroid_id" in m.group(1)  # pruning reaches the scan
+    assert_reads_only_probed_lists(got, path, cents, qs.first().query_vec, 2)
     # serve path never reads a float vector: the list scan schema is
     # (vec_id, pq_code) only
-    m = re.search(r"ReadSchema: ([^\n]*)", plan)
-    assert m and "embedding" not in m.group(1), m.group(1)
-    got.collect()
+    for _, read_cols, _ in executed_scans(got, "lists"):
+        assert read_cols == ["vec_id", "pq_code"], read_cols
 
 
 def test_ivfpq_append_equals_rebuild(spark, tmp_path):
