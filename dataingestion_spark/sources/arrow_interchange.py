@@ -1,20 +1,26 @@
-"""Shared helpers for the r14 mapInArrow interchange (Avro + Arrow
-IPC readers): decoded/native Arrow columns cross executor→JVM as
-RecordBatches with no pandas round-trip.
+"""Shared helpers for the Arrow interchange at the Avro and Arrow IPC
+boundaries: readers ship decoded/native Arrow columns executor→JVM as
+RecordBatches through ``mapInArrow``, writers take their shard as an
+Arrow table through ``groupBy(...).applyInArrow``. No pandas crossing
+on either side.
 
-Two rules make this safe:
+Two rules make this exact:
 
 - **Nullability**: Arrow refuses nullable→non-nullable casts, and
   Spark's reader applies its OWN schema while ignoring batch
   nullability flags — so arrays cast to an all-nullable twin of the
   schema's Arrow types.
-- **Timezones**: Spark's PANDAS serializer defines session-timezone
-  localization for timestamp columns; rather than re-implement it,
-  readers route timestamp-bearing schemas back to their mapInPandas
-  contract (:func:`schema_has_timestamp` is the gate). ``date32`` is
-  timezone-free and safe.
+- **Timestamps are instants**: Spark's ``TimestampType`` is
+  ``timestamp[us, tz=UTC]`` on the Arrow side, and the JVM reads the
+  raw microseconds since the epoch whatever the session time zone.
+  Readers cast decoded timestamps to that type (a metadata change);
+  writers receive the same raw instants. A pandas crossing would
+  instead localize them to the session time zone and turn nullable
+  longs into float64, which is why neither side has one.
 """
 from __future__ import annotations
+
+from typing import Callable, List
 
 
 def arrow_batch_builder(spark_schema, want):
@@ -48,19 +54,37 @@ def arrow_batch_builder(spark_schema, want):
     return target, _batch
 
 
-def schema_has_timestamp(dt) -> bool:
-    """True if the Spark type (recursively) contains a timestamp —
-    the mapInArrow gate (timestamps ride the pandas serializer's
-    session-timezone semantics)."""
-    from pyspark.sql import types as T
+def _iter_rows(rbs):
+    """Each row of a ``mapInArrow`` input as a dict, one at a time: a
+    whole-file row carries its file's bytes, so the batch is never
+    copied out to python at once."""
+    for rb in rbs:
+        for i in range(rb.num_rows):
+            yield rb.slice(i, 1).to_pylist()[0]
 
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return True
-    if isinstance(dt, T.StructType):
-        return any(schema_has_timestamp(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return schema_has_timestamp(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return (schema_has_timestamp(dt.keyType)
-                or schema_has_timestamp(dt.valueType))
-    return False
+
+def _write_shards(df, key: str, shards: int,
+                  write_one: Callable) -> List[str]:
+    """Hash-shard ``df`` on ``key`` into ``shards`` groups, sort each
+    group on ``key`` (stable) and call ``write_one(shard, table)`` once
+    per group inside ``applyInArrow``; it writes one file and returns
+    its name. Returns the sorted names. ``table`` holds ``df``'s
+    columns exactly as Spark's Arrow serializer ships them."""
+    from pyspark.sql import functions as F
+
+    sel = df.withColumn(
+        "_shard", F.pmod(F.xxhash64(F.col(key).cast("string")),
+                         F.lit(shards)).cast("int"))
+
+    def run(tbl):
+        import pyarrow as pa
+
+        shard = tbl.column("_shard")[0].as_py()
+        tbl = tbl.drop_columns(["_shard"]).sort_by(key).combine_chunks()
+        return pa.table({"name": [write_one(shard, tbl)],
+                         "n_records": pa.array([tbl.num_rows],
+                                               pa.int64())})
+
+    manifest = (sel.groupBy("_shard").applyInArrow(
+        run, "name string, n_records long").collect())
+    return sorted(r["name"] for r in manifest)

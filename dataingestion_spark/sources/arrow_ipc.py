@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["read_arrow_ipc", "read_arrow_ipc_split",
            "write_arrow_ipc"]
@@ -33,25 +33,20 @@ __all__ = ["read_arrow_ipc", "read_arrow_ipc_split",
 
 def read_arrow_ipc(spark: SparkSession, path: str,
                    columns: Optional[List[str]] = None,
-                   glob: str = "*.arrow",
-                   arrow: bool = True) -> DataFrame:
+                   glob: str = "*.arrow") -> DataFrame:
     """Read a directory of Arrow IPC (Feather v2) files.
 
     Schema comes from the first file's footer (one driver-side read —
     explicit, not inferred per task); every file must match it, a
     mismatch fails loudly with the file name. ``columns`` prunes at the
     deserialization boundary (IPC is columnar, so unprojected columns
-    are never materialized into pandas). One task per file.
+    are never materialized). One task per file.
 
-    ``arrow=True`` (r14; default since r15): the file's own RecordBatches ship straight
-    to the JVM via ``mapInArrow`` — the on-disk format IS Arrow, so
-    the default path's arrow→pandas→arrow round-trip is pure waste.
-    Timestamp-bearing schemas route back to mapInPandas (Spark's
-    pandas serializer defines their session-timezone semantics);
-    values are row-for-row identical either way."""
+    The file's own RecordBatches ship straight to the JVM via
+    ``mapInArrow`` — the on-disk format IS Arrow. Timestamps keep
+    their instants under any session time zone
+    (`sources/arrow_interchange.py`)."""
     import pyarrow as pa
-
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     scan = (spark.read.format("binaryFile")
             .option("pathGlobFilter", glob).load(path)
@@ -71,44 +66,45 @@ def read_arrow_ipc(spark: SparkSession, path: str,
     else:  # pragma: no cover - no object store in this image
         blob = scan.limit(1).collect()[0]["content"]
         schema = pa.ipc.open_file(pa.py_buffer(bytes(blob))).schema
+    schema, spark_schema = _project(schema, columns)
+
+    def parse(rbs):
+        from .arrow_interchange import _iter_rows, arrow_batch_builder
+
+        _target, batch = arrow_batch_builder(spark_schema, schema.names)
+        for row in _iter_rows(rbs):
+            reader = pa.ipc.open_file(pa.py_buffer(row["content"]))
+            yield from _ship(reader, row["path"], schema, batch,
+                             range(reader.num_record_batches))
+
+    return scan.mapInArrow(parse, spark_schema)
+
+
+def _project(schema, columns):
+    """(projected Arrow schema, its Spark schema); unknown ``columns``
+    fail loudly."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     if columns is not None:
         missing = [c for c in columns if c not in schema.names]
         if missing:
             raise ValueError(f"columns not in schema: {missing}")
         schema = pa.schema([schema.field(c) for c in columns])
-    spark_schema = from_arrow_schema(schema)
-    want = [f.name for f in schema]
+    return schema, from_arrow_schema(schema)
 
-    def parse(batches):
-        for pdf in batches:
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                reader = pa.ipc.open_file(pa.py_buffer(bytes(blob)))
-                _check_file_schema(reader.schema, schema, want, fpath)
-                tbl = reader.read_all().select(want)
-                yield tbl.to_pandas()
 
-    def parse_arrow(rbs):
-        from .arrow_interchange import arrow_batch_builder
-
-        _target, _batch = arrow_batch_builder(spark_schema, want)
-        for rb in rbs:
-            paths = rb.column("path")
-            contents = rb.column("content")
-            for i in range(rb.num_rows):
-                fpath = paths[i].as_py()
-                reader = pa.ipc.open_file(
-                    pa.py_buffer(bytes(contents[i].as_py())))
-                _check_file_schema(reader.schema, schema, want, fpath)
-                for bi in range(reader.num_record_batches):
-                    b = reader.get_batch(bi)
-                    if b.num_rows:
-                        yield _batch({c: b.column(c) for c in want})
-
-    from .arrow_interchange import schema_has_timestamp
-
-    if arrow and not schema_has_timestamp(spark_schema):
-        return scan.mapInArrow(parse_arrow, spark_schema)
-    return scan.mapInPandas(parse, spark_schema)
+def _ship(reader, fpath, schema, batch, batch_ids):
+    """Check one opened file against the pinned schema, then yield its
+    non-empty batches ``batch_ids`` projected and cast for Spark by
+    ``batch`` (from :func:`arrow_batch_builder`)."""
+    want = schema.names
+    _check_file_schema(reader.schema, schema, want, fpath)
+    for bi in batch_ids:
+        b = reader.get_batch(bi)
+        if b.num_rows:
+            yield batch({c: b.column(c) for c in want})
 
 
 def _check_file_schema(fschema, schema, want, fpath) -> None:
@@ -135,8 +131,9 @@ def write_arrow_ipc(df: DataFrame, out_dir: str, shards: int = 4,
     Rows hash-shard on ``order_by`` (default: first column) and sort
     within a shard — deterministic bytes given the data. ``batch_rows``
     sets the record-batch granularity inside each file (the unit a
-    random-access consumer reads); one task per shard. Returns shard
-    names.
+    random-access consumer reads); one task per shard, written from
+    the Arrow table Spark ships (``applyInArrow``) with no pandas step.
+    Returns shard names.
 
     ``compression`` ('zstd' or 'lz4') uses the IPC format's native
     per-buffer compression — unlike whole-file gzip, the file STAYS
@@ -152,30 +149,20 @@ def write_arrow_ipc(df: DataFrame, out_dir: str, shards: int = 4,
                          "(None, 'zstd' or 'lz4')")
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    key = order_by or df.columns[0]
-    cols = df.columns
-    # the file schema is PINNED from the Spark schema — from_pandas
-    # inference would type an all-null column as null() and an
-    # int-with-NaN column as float64, making shard schemas diverge by
-    # CONTENT and fail the reader's per-file type check
-    arrow_schema = to_arrow_schema(df.select(*cols).schema)
-    os.makedirs(out_dir, exist_ok=True)
-    sel = df.withColumn(
-        "_shard", F.pmod(F.xxhash64(F.col(key).cast("string")),
-                         F.lit(shards)).cast("int"))
+    from .arrow_interchange import _write_shards
 
-    def write_shard(pdf):
-        import pandas as pd
+    # the file schema is PINNED from the Spark schema: every shard
+    # carries the same types (timestamps as UTC instants) whatever the
+    # session time zone or the shard's content
+    arrow_schema = to_arrow_schema(df.schema)
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write_one(shard, tbl):
         import pyarrow as pa
 
-        if len(pdf) == 0:
-            return pd.DataFrame({"name": [], "n_records": []})
-        shard = int(pdf["_shard"].iloc[0])
-        pdf = pdf.sort_values(key, kind="mergesort")
         name = f"{prefix}-{shard:05d}-of-{shards:05d}.arrow"
         tmp = os.path.join(out_dir, f".{name}.tmp")
-        tbl = pa.Table.from_pandas(pdf[cols], schema=arrow_schema,
-                                   preserve_index=False)
+        tbl = tbl.cast(arrow_schema)
         opts = pa.ipc.IpcWriteOptions(
             compression=compression) if compression else None
         with pa.OSFile(tmp, "wb") as sink:
@@ -183,11 +170,9 @@ def write_arrow_ipc(df: DataFrame, out_dir: str, shards: int = 4,
                 for batch in tbl.to_batches(max_chunksize=batch_rows):
                     w.write_batch(batch)
         os.replace(tmp, os.path.join(out_dir, name))
-        return pd.DataFrame({"name": [name], "n_records": [len(pdf)]})
+        return name
 
-    manifest = (sel.groupBy("_shard").applyInPandas(
-        write_shard, "name string, n_records long").collect())
-    return sorted(r["name"] for r in manifest)
+    return _write_shards(df, order_by or df.columns[0], shards, write_one)
 
 
 def _open_ipc(path: str, backend):
@@ -218,8 +203,7 @@ def read_arrow_ipc_split(spark: SparkSession, path: str,
                          columns: Optional[List[str]] = None, *,
                          split_mb: int = 128,
                          glob_pat: str = "*.arrow",
-                         backend=None,
-                         arrow: bool = True) -> DataFrame:
+                         backend=None) -> DataFrame:
     """Scale-IN Arrow IPC reader: the file format's FOOTER indexes
     every record batch, so splitting needs no resync heuristics at all
     — the planner reads each footer (small tail reads), assigns
@@ -236,13 +220,8 @@ def read_arrow_ipc_split(spark: SparkSession, path: str,
     mismatch. ``columns`` prunes at the deserialization boundary.
     Local paths open directly; other schemes route through the
     range-read DataBackend (or pass ``backend=``). Footer probes run
-    as one Spark job above 32 files. ``arrow=True`` ships each task's
-    batches straight to the JVM via ``mapInArrow`` (see
-    :func:`read_arrow_ipc`)."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+    as one Spark job above 32 files. Each task's batches ship straight
+    to the JVM via ``mapInArrow`` (see :func:`read_arrow_ipc`)."""
     from ..sinks.data_backend import (
         list_split_files, resolve_split_backend,
     )
@@ -262,14 +241,8 @@ def read_arrow_ipc_split(spark: SparkSession, path: str,
             .parallelize(files, min(len(files), 256))
             .map(lambda p: (p, _ipc_meta(p, bk))).collect())
 
-    schema = _open_ipc(files[0], backend).schema
-    if columns is not None:
-        missing = [c for c in columns if c not in schema.names]
-        if missing:
-            raise ValueError(f"columns not in schema: {missing}")
-        schema = pa.schema([schema.field(c) for c in columns])
-    spark_schema = from_arrow_schema(schema)
-    want = [f.name for f in schema]
+    schema, spark_schema = _project(
+        _open_ipc(files[0], backend).schema, columns)
 
     step = split_mb << 20
     ranges = []
@@ -287,37 +260,14 @@ def read_arrow_ipc_split(spark: SparkSession, path: str,
         ranges, "path string, first long, count long"
     ).repartition(min(len(ranges), 4096))
 
-    def decode(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                reader = _open_ipc(row.path, backend)
-                _check_file_schema(reader.schema, schema, want,
-                                   row.path)
-                if row.count == 0:
-                    continue
-                got_b = [reader.get_batch(int(row.first) + i)
-                         for i in range(int(row.count))]
-                tbl = pa.Table.from_batches(got_b).select(want)
-                yield tbl.to_pandas()
+    def decode(rbs):
+        from .arrow_interchange import _iter_rows, arrow_batch_builder
 
-    def decode_arrow(rbs):
-        from .arrow_interchange import arrow_batch_builder
+        _target, batch = arrow_batch_builder(spark_schema, schema.names)
+        for row in _iter_rows(rbs):
+            first = row["first"]
+            yield from _ship(_open_ipc(row["path"], backend), row["path"],
+                             schema, batch,
+                             range(first, first + row["count"]))
 
-        _target, _batch = arrow_batch_builder(spark_schema, want)
-        for rb in rbs:
-            for i in range(rb.num_rows):
-                fpath = rb.column("path")[i].as_py()
-                first = int(rb.column("first")[i].as_py())
-                count = int(rb.column("count")[i].as_py())
-                reader = _open_ipc(fpath, backend)
-                _check_file_schema(reader.schema, schema, want, fpath)
-                for bi in range(count):
-                    b = reader.get_batch(first + bi)
-                    if b.num_rows:
-                        yield _batch({c: b.column(c) for c in want})
-
-    from .arrow_interchange import schema_has_timestamp
-
-    if arrow and not schema_has_timestamp(spark_schema):
-        return rdf.mapInArrow(decode_arrow, spark_schema)
-    return rdf.mapInPandas(decode, spark_schema)
+    return rdf.mapInArrow(decode, spark_schema)

@@ -59,7 +59,7 @@ import struct
 import zlib
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 __all__ = [
@@ -381,14 +381,16 @@ def _compile_encoder(node: Dict, path: str) -> Callable[[bytearray, Any], None]:
         return lambda out, v: None
     if kind == "long" or kind == "int":
         logical = node.get("logical")
-        if logical in ("timestamp-micros", "local-timestamp-micros"):
-            def enc_ts(out, v):
-                # pandas Timestamp.value is ns since epoch (session tz is
-                # pinned UTC repo-wide, so this IS the spec's UTC micros)
-                _enc_long(out, v.value // 1000)
-            return enc_ts
-        if logical in ("timestamp-millis", "local-timestamp-millis"):
-            return lambda out, v: _enc_long(out, v.value // 1_000_000)
+        if logical and logical.endswith(("timestamp-micros",
+                                          "timestamp-millis")):
+            import pandas as pd
+
+            # Timestamp.value is ns since the epoch, UTC: a zoned value
+            # keeps its instant, a naive one (a struct child from
+            # Arrow) is UTC wall time
+            div = 1000 if logical.endswith("micros") else 1_000_000
+            return lambda out, v: _enc_long(
+                out, pd.Timestamp(v).value // div)
         if logical == "date":
             return lambda out, v: _enc_long(
                 out, v.toordinal() - _EPOCH_ORDINAL)
@@ -999,54 +1001,20 @@ def read_container(blob: bytes, name: str = "<avro>",
     int→long→float→double and string↔bytes promote. Corruption fails
     loudly with the file name: bad magic, unknown codec, sync-marker
     mismatch, truncated varints/bytes."""
-    node, codec, sync, body_at, _ = _parse_header(blob, name)
-    cur = _Cursor(blob, name)
-    cur.pos = body_at
-    if reader_node is None or node == reader_node:
-        dec = _compile_decoder(node, "$")
-    else:
-        try:
-            dec = _compile_resolver(node, reader_node, "$")
-        except ValueError as e:
-            raise ValueError(f"{name}: {e}") from None
-    rows: List[Any] = []
-    while cur.pos < len(blob):
-        count = cur.read_long()
-        size = cur.read_long()
-        data = cur.read_fixed(size)
-        if cur.read_fixed(16) != sync:
-            raise ValueError(f"{name}: sync marker mismatch at "
-                             f"offset {cur.pos - 16} — corrupt block")
-        data = _decompress_block(codec, data, name)
-        bc = _Cursor(data, name)
-        for _ in range(count):
-            rows.append(dec(bc))
-            if max_rows is not None and len(rows) >= max_rows:
-                return node, rows
-        if bc.pos != len(data):
-            raise ValueError(f"{name}: {len(data) - bc.pos} trailing bytes "
-                             "in block — writer/reader schema mismatch")
-    return node, rows
+    node, datas, counts = _container_blocks(blob, name)
+    rows = _decode_payloads(datas, counts, name, node, reader_node)
+    return node, rows if max_rows is None else rows[:max_rows]
 
 
 def decode_blocks(blob: bytes, name: str = "<avro>") -> List[Any]:
     return read_container(blob, name)[1]
 
 
-def read_container_columnar(blob: bytes, name: str = "<avro>",
-                            reader_node: Optional[Dict] = None,
-                            arrow: bool = False):
-    """Columnar fast path: parse the container framing (header, sync
-    checks, per-block decompress) then hand the decompressed blocks to
-    the numpy lock-step decoder (`sources/avro_vec.py`). Returns
-    (writer node, {column: pd.Series}) or (writer node, None) when the
-    schema/file shape is out of the vectorized path's coverage — the
-    caller then uses :func:`read_container`. ``arrow=True`` returns
-    {column: pa.Array} with no pandas crossing (r14, the mapInArrow
-    interchange). Corruption raises exactly like the scalar path
-    (file named)."""
-    from .avro_vec import decode_blocks_columnar
-
+def _container_blocks(blob: bytes, name: str
+                      ) -> Tuple[Dict, List[bytes], List[int]]:
+    """Container framing -> (writer node, decompressed block payloads,
+    row count per block). Corruption fails loudly with the file name:
+    bad magic, unknown codec, sync-marker mismatch, truncation."""
     node, codec, sync, body_at, _ = _parse_header(blob, name)
     cur = _Cursor(blob, name)
     cur.pos = body_at
@@ -1061,8 +1029,23 @@ def read_container_columnar(blob: bytes, name: str = "<avro>",
                              f"offset {cur.pos - 16} — corrupt block")
         datas.append(_decompress_block(codec, data, name))
         counts.append(count)
+    return node, datas, counts
+
+
+def read_container_columnar(blob: bytes, name: str = "<avro>",
+                            reader_node: Optional[Dict] = None):
+    """Columnar fast path: parse the container framing (header, sync
+    checks, per-block decompress) then hand the decompressed blocks to
+    the numpy lock-step decoder (`sources/avro_vec.py`). Returns
+    (writer node, {column: pa.Array}) or (writer node, None) when the
+    schema/file shape is out of the vectorized path's coverage — the
+    caller then uses :func:`read_container`. Corruption raises exactly
+    like the scalar path (file named)."""
+    from .avro_vec import decode_blocks_columnar
+
+    node, datas, counts = _container_blocks(blob, name)
     return node, decode_blocks_columnar(
-        datas, counts, name, node, reader_node or node, arrow=arrow)
+        datas, counts, name, node, reader_node or node)
 
 
 # ---------------------------------------------------------------------------
@@ -1071,8 +1054,7 @@ def read_container_columnar(blob: bytes, name: str = "<avro>",
 def read_avro(spark: SparkSession, path: str,
               columns: Optional[List[str]] = None,
               glob: str = "*.avro",
-              schema: Optional[Any] = None,
-              arrow: bool = True) -> DataFrame:
+              schema: Optional[Any] = None) -> DataFrame:
     """Read a directory of Avro container files as a DataFrame.
 
     The READER schema comes from ``schema`` (an Avro schema JSON dict
@@ -1088,17 +1070,13 @@ def read_avro(spark: SparkSession, path: str,
     are SKIPPED during decode, not just dropped (row-major IO still
     reads the bytes; see module docstring).
 
-    ``arrow=True`` (r14; the default since r15 — every declared read
-    path now carries the interchange) swaps the parse to ``mapInArrow``: the
-    vectorized decoder already builds Arrow buffers, so the column
-    crosses executor→JVM as ONE Arrow array with no pandas round-trip
-    (end-to-end 1.2-1.5x, scripts/scale_probe_avro_arrow.py; the r13
-    struct probe put the pandas crossing at ~40% of decode cost).
-    Files that fall out of vectorized coverage decode scalar and
-    cross via ``pa.array``; schemas with timestamp/date logicals
-    route back to the mapInPandas contract (Spark's pandas serializer
-    defines their session-timezone semantics). Results are
-    row-for-row identical to ``arrow=False`` either way."""
+    The parse runs in ``mapInArrow``: the vectorized decoder already
+    builds Arrow buffers, so each file's columns cross executor→JVM as
+    Arrow arrays with no pandas round-trip (the r13 struct probe put
+    a pandas crossing at ~40% of decode cost). Files that fall out of
+    vectorized coverage decode scalar and cross via ``pa.array``.
+    Timestamps keep their instants under any session time zone
+    (`sources/arrow_interchange.py`)."""
     scan = (spark.read.format("binaryFile")
             .option("pathGlobFilter", glob).load(path)
             .select("path", "content"))
@@ -1113,95 +1091,18 @@ def read_avro(spark: SparkSession, path: str,
                 local = local[1:]
             with open(local, "rb") as fh:
                 head = fh.read(1 << 20)  # header is tiny; 1 MB is generous
-            reader_node, _ = read_container(_header_only(head), fpath)
         else:  # pragma: no cover - no object store in this image
-            blob = scan.limit(1).collect()[0]["content"]
-            reader_node, _ = read_container(_header_only(bytes(blob)),
-                                            fpath)
-    elif isinstance(schema, T.StructType):
-        reader_node = parse_schema(spark_to_avro_schema(schema))
-    else:
-        reader_node = parse_schema(schema)
-    if columns is not None:
-        by_name = {f["name"]: f for f in reader_node["fields"]}
-        missing = [c for c in columns if c not in by_name]
-        if missing:
-            raise ValueError(f"columns not in schema: {missing}")
-        reader_node = {"kind": "record",
-                       "name": reader_node.get("name"),
-                       "fields": [by_name[c] for c in columns]}
-    if arrow and not _node_has_logical(reader_node):
-        parse_a, spark_schema = _container_parser_arrow(reader_node)
-        return scan.mapInArrow(parse_a, spark_schema)
-    parse, spark_schema = _container_parser(reader_node)
-    return scan.mapInPandas(parse, spark_schema)
-
-
-def _node_has_logical(node: Dict) -> bool:
-    """True if any field (recursively) carries a timestamp/date
-    logical type. Those columns' session-timezone semantics are
-    defined by Spark's PANDAS serializer; ``read_avro(arrow=True)``
-    routes such schemas to the mapInPandas contract rather than
-    re-implement timezone localization in the Arrow path."""
-    k = node.get("kind")
-    if node.get("logical"):
-        return True
-    if k == "record":
-        return any(_node_has_logical(f["schema"])
-                   for f in node["fields"])
-    if k == "union":
-        return any(_node_has_logical(b) for b in node["branches"])
-    if k == "array":
-        return _node_has_logical(node["items"])
-    if k == "map":
-        return _node_has_logical(node["values"])
-    return False
-
-
-def _container_parser_arrow(reader_node: Dict):
-    """(mapInArrow parse fn, Spark schema): the r14 Arrow interchange.
-    The vectorized decoder's output arrays are cast to the exact Arrow
-    types Spark's serializer expects (large_utf8→utf8 etc. — one C
-    pass each) and shipped as RecordBatches; no pandas anywhere on the
-    fast path. Out-of-coverage files decode scalar and build arrays
-    via ``pa.array`` per column."""
-    spark_schema = avro_to_spark_schema(reader_node)
-    want = list(spark_schema.names)
-
-    def parse(batches):
-        import pyarrow as pa
-
-        from .arrow_interchange import arrow_batch_builder
-
-        target, _batch = arrow_batch_builder(spark_schema, want)
-
-        for rb in batches:
-            paths = rb.column("path")
-            contents = rb.column("content")
-            for i in range(rb.num_rows):
-                fpath = paths[i].as_py()
-                blob = bytes(contents[i].as_py())
-                _, cols_out = read_container_columnar(
-                    blob, fpath, reader_node=reader_node, arrow=True)
-                if cols_out is not None:
-                    yield _batch(cols_out)
-                    continue
-                _, rows = read_container(blob, fpath,
-                                         reader_node=reader_node)
-                yield _batch({
-                    c: pa.array([r.get(c) for r in rows],
-                                type=target[c])
-                    for c in want})
-
-    return parse, spark_schema
+            head = bytes(scan.limit(1).collect()[0]["content"])
+        schema = _parse_header(head, fpath)[4]
+    parse, spark_schema = _container_parser(
+        _resolve_reader_node(schema, columns), _file_blocks)
+    return scan.mapInArrow(parse, spark_schema)
 
 
 def _resolve_reader_node(schema: Any,
                          columns: Optional[List[str]]) -> Dict:
-    """Reader node from an explicit schema (Avro JSON dict or Spark
-    StructType), with ``columns`` pruning — shared by the streaming
-    reader (which cannot probe a first file's header: the landing dir
-    may be empty at start)."""
+    """Reader node from a schema (Avro JSON dict or Spark StructType),
+    with ``columns`` pruning — shared by every Spark-facing reader."""
     if isinstance(schema, T.StructType):
         node = parse_schema(spark_to_avro_schema(schema))
     else:
@@ -1216,33 +1117,44 @@ def _resolve_reader_node(schema: Any,
     return node
 
 
-def _container_parser(reader_node: Dict):
-    """(mapInPandas parse fn, Spark schema) decoding whole container
-    blobs from (path, content) rows against ``reader_node`` — shared
-    by the batch scan and the streaming landing-dir tail."""
+def _file_blocks(row: Dict) -> Tuple[str, Dict, List[bytes], List[int]]:
+    """(name, writer node, payloads, counts) of one whole-file
+    ``(path, content)`` row."""
+    return (row["path"],) + _container_blocks(row["content"], row["path"])
+
+
+def _container_parser(reader_node: Dict, blocks: Callable):
+    """(mapInArrow parse fn, Spark schema) shared by the batch scan,
+    the streaming landing-dir tail and the sync-marker splits:
+    ``blocks(row)`` turns one input row into (name, writer node,
+    decompressed payloads, row counts), which decode against
+    ``reader_node`` through the numpy lock-step path
+    (`sources/avro_vec.py`) or, out of its coverage or below its
+    block gate, the scalar decoder via ``pa.array``. Arrays are cast
+    to the exact Arrow types Spark expects and shipped as one
+    RecordBatch per row."""
     spark_schema = avro_to_spark_schema(reader_node)
     want = list(spark_schema.names)
 
-    def parse(batches):
-        import pandas as pd
+    def parse(rbs):
+        import pyarrow as pa
 
-        for pdf in batches:
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                blob = bytes(blob)
-                # columnar fast path (numpy lock-step over blocks,
-                # sources/avro_vec.py); None = out of coverage or too
-                # few blocks to pay for the waves -> scalar decode
-                _, cols_out = read_container_columnar(
-                    blob, fpath, reader_node=reader_node)
-                if cols_out is not None:
-                    yield pd.DataFrame(
-                        {c: cols_out[c] for c in want}, columns=want)
-                    continue
-                _, rows = read_container(blob, fpath,
-                                         reader_node=reader_node)
-                yield pd.DataFrame(
-                    {c: [r.get(c) for r in rows] for c in want},
-                    columns=want)
+        from .arrow_interchange import _iter_rows, arrow_batch_builder
+        from .avro_vec import decode_blocks_columnar
+
+        target, _batch = arrow_batch_builder(spark_schema, want)
+        for row in _iter_rows(rbs):
+            name, node, datas, counts = blocks(row)
+            if not datas:
+                continue
+            cols = decode_blocks_columnar(datas, counts, name, node,
+                                          reader_node)
+            if cols is None:
+                rows = _decode_payloads(datas, counts, name, node,
+                                        reader_node)
+                cols = {c: pa.array([r.get(c) for r in rows],
+                                    type=target[c]) for c in want}
+            yield _batch(cols)
 
     return parse, spark_schema
 
@@ -1260,12 +1172,12 @@ def stream_avro(spark: SparkSession, path: str, schema: Any,
     reader (shared `_container_parser`)."""
     from .markdown import stream_binary_files
 
-    reader_node = _resolve_reader_node(schema, columns)
-    parse, spark_schema = _container_parser(reader_node)
+    parse, spark_schema = _container_parser(
+        _resolve_reader_node(schema, columns), _file_blocks)
     return stream_binary_files(
         spark, path, glob,
         max_files_per_trigger=max_files_per_trigger
-    ).mapInPandas(parse, spark_schema)
+    ).mapInArrow(parse, spark_schema)
 
 
 def read_avro_split(spark: SparkSession, path: str, *,
@@ -1273,8 +1185,7 @@ def read_avro_split(spark: SparkSession, path: str, *,
                     columns: Optional[List[str]] = None,
                     schema: Optional[Any] = None,
                     glob_pat: str = "*.avro",
-                    backend: Optional[Any] = None,
-                    arrow: bool = True) -> DataFrame:
+                    backend: Optional[Any] = None) -> DataFrame:
     """Scale-IN reader: split each container at SYNC MARKERS so one
     large file decodes across many executors.
 
@@ -1289,15 +1200,13 @@ def read_avro_split(spark: SparkSession, path: str, *,
     modulo the 2^-128 false-sync probability the spec accepts).
     Blocks decode through the numpy lock-step columnar path
     (`sources/avro_vec.py` — vector width = blocks per split) with
-    scalar fallback, same coverage rules as :func:`read_avro`.
+    scalar fallback, and cross executor→JVM through the same
+    ``mapInArrow`` parse as :func:`read_avro`.
 
     Contrast :func:`read_avro` (one task per file via ``binaryFile``):
     there parallelism = shard count, here parallelism = corpus bytes /
     split_mb, which is what a 100 TB corpus of awkwardly-large foreign
-    shards needs. ``arrow=True`` applies the same mapInArrow
-    interchange as :func:`read_avro` — per-split decoded columns cross
-    executor→JVM as one Arrow batch with no pandas round-trip; schemas
-    with timestamp/date logicals route back to mapInPandas. Local/POSIX (incl. mounted DFS) paths seek with
+    shards needs. Local/POSIX (incl. mounted DFS) paths seek with
     ``open()``; any other scheme routes through the registered
     range-read :class:`~..sinks.data_backend.DataBackend` (or pass
     ``backend=`` explicitly). Header planning is driver-side for small
@@ -1326,22 +1235,9 @@ def read_avro_split(spark: SparkSession, path: str, *,
             .parallelize(files, min(len(files), 256))
             .map(lambda p: (p, _split_header_meta(p, bk))).collect())
 
-    if schema is None:
-        reader_node = parse_schema(json.loads(headers[files[0]][3]))
-    elif isinstance(schema, T.StructType):
-        reader_node = parse_schema(spark_to_avro_schema(schema))
-    else:
-        reader_node = parse_schema(schema)
-    if columns is not None:
-        by_name = {f["name"]: f for f in reader_node["fields"]}
-        missing = [c for c in columns if c not in by_name]
-        if missing:
-            raise ValueError(f"columns not in schema: {missing}")
-        reader_node = {"kind": "record",
-                       "name": reader_node.get("name"),
-                       "fields": [by_name[c] for c in columns]}
-    spark_schema = avro_to_spark_schema(reader_node)
-    want = list(spark_schema.names)
+    reader_node = _resolve_reader_node(
+        json.loads(headers[files[0]][3]) if schema is None else schema,
+        columns)
 
     step = split_mb << 20
     ranges = []
@@ -1360,69 +1256,16 @@ def read_avro_split(spark: SparkSession, path: str, *,
                 "sync_hex string, codec string, schema_json string"
     ).repartition(min(len(ranges), 4096))
 
-    def decode(batches):
-        import pandas as pd
+    def split_blocks(row):
+        datas, counts = _read_split_blocks(
+            row["path"], row["start"], row["end"], row["first"],
+            bytes.fromhex(row["sync_hex"]), row["codec"],
+            backend=backend)
+        node = parse_schema(json.loads(row["schema_json"]))
+        return row["path"], node, datas, counts
 
-        from .avro_vec import decode_blocks_columnar
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                datas, counts = _read_split_blocks(
-                    row.path, int(row.start), int(row.end),
-                    bool(row.first), bytes.fromhex(row.sync_hex),
-                    row.codec, backend=backend)
-                if not datas:
-                    continue
-                node = parse_schema(json.loads(row.schema_json))
-                cols_out = decode_blocks_columnar(
-                    datas, counts, row.path, node, reader_node)
-                if cols_out is not None:
-                    yield pd.DataFrame(
-                        {c: cols_out[c] for c in want}, columns=want)
-                    continue
-                rows = _decode_payloads(datas, counts, row.path, node,
-                                        reader_node)
-                yield pd.DataFrame(
-                    {c: [r.get(c) for r in rows] for c in want},
-                    columns=want)
-
-    def decode_arrow(batches):
-        import pyarrow as pa
-
-        from .avro_vec import decode_blocks_columnar
-
-        from .arrow_interchange import arrow_batch_builder
-
-        target, _batch = arrow_batch_builder(spark_schema, want)
-        for rb in batches:
-            for i in range(rb.num_rows):
-                row = {c: rb.column(c)[i].as_py()
-                       for c in ("path", "start", "end", "first",
-                                 "sync_hex", "codec", "schema_json")}
-                datas, counts = _read_split_blocks(
-                    row["path"], int(row["start"]), int(row["end"]),
-                    bool(row["first"]),
-                    bytes.fromhex(row["sync_hex"]),
-                    row["codec"], backend=backend)
-                if not datas:
-                    continue
-                node = parse_schema(json.loads(row["schema_json"]))
-                cols_out = decode_blocks_columnar(
-                    datas, counts, row["path"], node, reader_node,
-                    arrow=True)
-                if cols_out is not None:
-                    yield _batch(cols_out)
-                    continue
-                rows = _decode_payloads(datas, counts, row["path"],
-                                        node, reader_node)
-                yield _batch({
-                    c: pa.array([r.get(c) for r in rows],
-                                type=target[c])
-                    for c in want})
-
-    if arrow and not _node_has_logical(reader_node):
-        return rdf.mapInArrow(decode_arrow, spark_schema)
-    return rdf.mapInPandas(decode, spark_schema)
+    parse, spark_schema = _container_parser(reader_node, split_blocks)
+    return rdf.mapInArrow(parse, spark_schema)
 
 
 def _split_header_meta(path: str, backend: Any
@@ -1519,11 +1362,16 @@ def _read_split_blocks(path: str, start: int, end: int, first: bool,
 def _decode_payloads(datas: List[bytes], counts: List[int], name: str,
                      node: Dict, reader_node: Optional[Dict]
                      ) -> List[Any]:
-    """Scalar decode of already-decompressed block payloads."""
+    """Scalar decode of already-decompressed block payloads; with
+    ``reader_node``, rows come back READER-shaped (see
+    :func:`read_container`)."""
     if reader_node is None or node == reader_node:
         dec = _compile_decoder(node, "$")
     else:
-        dec = _compile_resolver(node, reader_node, "$")
+        try:
+            dec = _compile_resolver(node, reader_node, "$")
+        except ValueError as e:
+            raise ValueError(f"{name}: {e}") from None
     rows: List[Any] = []
     for data, count in zip(datas, counts):
         bc = _Cursor(data, name)
@@ -1534,26 +1382,6 @@ def _decode_payloads(datas: List[bytes], counts: List[int], name: str,
                 f"{name}: {len(data) - bc.pos} trailing bytes in "
                 "block — writer/reader schema mismatch")
     return rows
-
-
-def _header_only(head: bytes) -> bytes:
-    """Trim a file prefix to just past the header sync so
-    :func:`read_container` can parse schema without any data blocks."""
-    if head[:4] != _MAGIC:
-        raise ValueError(f"not an Avro container (magic {head[:4]!r})")
-    cur = _Cursor(head, "<header>")
-    cur.pos = 4
-    while True:
-        n = cur.read_long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            cur.read_long()
-        for _ in range(n):
-            cur.read_bytes()
-            cur.read_bytes()
-    return head[:cur.pos + 16]
 
 
 def write_avro(df: DataFrame, out_dir: str, shards: int = 4,
@@ -1567,7 +1395,9 @@ def write_avro(df: DataFrame, out_dir: str, shards: int = 4,
     TFRecord/Arrow-IPC/WebDataset sinks). ``codec`` is 'null',
     'deflate' (raw RFC-1951) or 'snappy' (block + 4-byte BE CRC32 of
     the uncompressed data, the spec's three core codecs). One task
-    per shard; returns shard names."""
+    per shard, which arrives as an Arrow table (``applyInArrow``), so
+    nullable longs and timestamps are stored exactly under any session
+    time zone; returns shard names."""
     import hashlib
 
     if shards < 1:
@@ -1575,37 +1405,31 @@ def write_avro(df: DataFrame, out_dir: str, shards: int = 4,
     if codec not in _CODECS:
         raise ValueError(f"unsupported avro codec {codec!r} "
                          f"(one of {list(_CODECS)})")
-    key = order_by or df.columns[0]
+    from .arrow_interchange import _write_shards
+
     cols = df.columns
     schema_js = spark_to_avro_schema(df.schema, name="row")
     # compile once on the driver to fail fast on unmappable types
     _compile_encoder(parse_schema(schema_js), "$")
     os.makedirs(out_dir, exist_ok=True)
-    sel = df.withColumn(
-        "_shard", F.pmod(F.xxhash64(F.col(key).cast("string")),
-                         F.lit(shards)).cast("int"))
 
-    def write_shard(pdf):
-        import pandas as pd
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"name": [], "n_records": []})
-        shard = int(pdf["_shard"].iloc[0])
-        pdf = pdf.sort_values(key, kind="mergesort")
+    def write_one(shard, tbl):
         name = f"{prefix}-{shard:05d}-of-{shards:05d}.avro"
         sync = hashlib.sha256(name.encode()).digest()[:16]
         tmp = os.path.join(out_dir, f".{name}.tmp")
+        # object ints keep nullable longs exact (a float64 crossing
+        # rounds them above 2^53); timestamps stay tz-aware instants
+        pdf = tbl.to_pandas(integer_object_nulls=True,
+                            maps_as_pydicts="strict")
         # vectorized columnar encoder first (byte-identical output,
         # sources/avro_vec_enc.py); scalar per-row fallback otherwise
         if not write_container_frame(tmp, schema_js, pdf, cols,
                                      codec=codec, sync=sync,
                                      block_rows=block_rows):
-            rows = pdf[cols].to_dict("records")
-            write_container(tmp, schema_js, rows, codec=codec,
-                            sync=sync, block_rows=block_rows)
+            write_container(tmp, schema_js, pdf.to_dict("records"),
+                            codec=codec, sync=sync,
+                            block_rows=block_rows)
         os.replace(tmp, os.path.join(out_dir, name))
-        return pd.DataFrame({"name": [name], "n_records": [len(pdf)]})
+        return name
 
-    manifest = (sel.groupBy("_shard").applyInPandas(
-        write_shard, "name string, n_records long").collect())
-    return sorted(r["name"] for r in manifest)
+    return _write_shards(df, order_by or df.columns[0], shards, write_one)

@@ -25,8 +25,10 @@ block simultaneously with numpy gathers:
 Vector width = number of blocks, so throughput GROWS with file size
 (a 128 MB shard at the default 1024-row blocks is a ~1000-wide vector);
 small files (< _MIN_BLOCKS blocks) fall back to the scalar decoder,
-which is faster at that scale. Output is columnar (pandas-ready), so
-`read_avro` also skips the N-dict materialization entirely.
+which is faster at that scale. Output is one ``pa.Array`` per column —
+the product `read_avro`/`read_avro_split` ship to the JVM through
+``mapInArrow`` — so the readers also skip the N-dict materialization
+entirely.
 
 Coverage: flat records of long/int/double/float/boolean/string/bytes/
 enum/fixed, ``['null', T]`` nullable unions, timestamp/date logicals,
@@ -73,13 +75,6 @@ import numpy as np
 
 _MIN_BLOCKS = 64  # vector width below breakeven (~50 measured) — scalar
 
-
-class _VecFallback(Exception):
-    """Raised mid-decode when the DATA (not the schema) leaves the
-    vectorized path's coverage. The caller falls back to the scalar
-    decoder; never surfaces to users. No in-tree raiser since r12
-    closed multi-block arrays — kept as the documented escape hatch
-    for future partially-covered shapes."""
 
 _U0, _U1, _U7, _U63 = (np.uint64(0), np.uint64(1), np.uint64(7),
                        np.uint64(63))
@@ -662,19 +657,15 @@ def _exec_step(step: Dict, buf: np.ndarray, pos: np.ndarray,
 
 
 # ---------------------------------------------------------------------------
-# finalization to pandas columns
+# finalization to Arrow arrays
 
-def _finalize(step: Dict, cols: _Cols, buf: np.ndarray,
-              arrow: bool = False):
-    """One decoded column. ``arrow=False`` (the mapInPandas contract)
-    crosses to a pandas Series; ``arrow=True`` (r14, the mapInArrow
-    opt-in) returns the ``pa.Array`` directly — the string/bytes/array
-    branches already build Arrow buffers, so arrow mode simply skips
-    the ``to_pandas`` crossing, and numeric branches use the C-level
-    ``pa.array(ndarray, mask=)`` constructor. Logical (timestamp/
-    date) columns are excluded from arrow mode by the caller's plan
-    gate — their session-timezone semantics ride the pandas path."""
-    import pandas as pd
+def _finalize(step: Dict, cols: _Cols, buf: np.ndarray):
+    """One decoded column as a ``pa.Array``: the string/bytes/array
+    branches assemble Arrow buffers directly, numeric branches use the
+    C-level ``pa.array(ndarray, mask=)`` constructor. Timestamp
+    logicals become Arrow timestamps of the wire's unit (UTC instants;
+    ``local-*`` ones zone-less), dates become ``date32`` — the reader
+    casts each to its Spark type with no time zone applied."""
     import pyarrow as pa
 
     name = step["name"]
@@ -780,9 +771,7 @@ def _finalize(step: Dict, cols: _Cols, buf: np.ndarray,
         arr = pa.Array.from_buffers(
             pa.large_list(struct.type), len(counts),
             [validity, pa.py_buffer(offs)], children=[struct])
-        if arrow:
-            return arr
-        return pd.Series(arr.to_pandas(), dtype=object)
+        return arr
     if k == "array" and step["elem_w"] is None:
         # string/bytes elements: scatter each element wave's
         # (start, len) into flat slot arrays (unique indices — fast
@@ -819,9 +808,7 @@ def _finalize(step: Dict, cols: _Cols, buf: np.ndarray,
             except pa.lib.ArrowInvalid as e:
                 raise ValueError(
                     f"invalid UTF-8 in array column {name!r}: {e}")
-        if arrow:
-            return arr
-        return pd.Series(arr.to_pandas(), dtype=object)
+        return arr
     if k == "array":
         starts, lens = cols.starts[name], cols.lens[name]
         w = step["elem_w"]
@@ -869,9 +856,7 @@ def _finalize(step: Dict, cols: _Cols, buf: np.ndarray,
         arr = pa.Array.from_buffers(
             pa.large_list(child.type), len(counts),
             [validity, pa.py_buffer(offs)], children=[child])
-        if arrow:
-            return arr
-        return pd.Series(arr.to_pandas(), dtype=object)
+        return arr
     if k in ("string", "bytes", "fixed"):
         starts, lens = cols.starts[name], cols.lens[name]
         values = _gather_ranges(buf, starts, lens)
@@ -896,51 +881,29 @@ def _finalize(step: Dict, cols: _Cols, buf: np.ndarray,
             except pa.lib.ArrowInvalid as e:
                 raise ValueError(
                     f"invalid UTF-8 in string column {name!r}: {e}")
-        if arrow:
-            return arr
-        return pd.Series(arr.to_pandas(), dtype=object)
+        return arr
+    null_mask = mask if has_null else None
     if k == "enum":
-        if arrow:
-            idx = pa.array(cols.num[name].astype(np.int32),
-                           mask=mask if has_null else None)
-            return pa.DictionaryArray.from_arrays(
-                idx, pa.array(step["symbols"])).cast(pa.large_utf8())
-        syms = np.array(step["symbols"], dtype=object)
-        out = syms[cols.num[name]]
-        if has_null:
-            out[mask] = None
-        return pd.Series(out, dtype=object)
+        idx = pa.array(cols.num[name].astype(np.int32), mask=null_mask)
+        return pa.DictionaryArray.from_arrays(
+            idx, pa.array(step["symbols"])).cast(pa.large_utf8())
     if logical in ("timestamp-micros", "local-timestamp-micros",
                    "timestamp-millis", "local-timestamp-millis"):
-        scale = 1000 if logical.endswith("micros") else 1_000_000
-        out = (cols.num[name] * scale).view("datetime64[ns]")
-        s = pd.Series(out)
-        if has_null:
-            s[mask] = pd.NaT
-        return s
+        typ = pa.timestamp("us" if logical.endswith("micros") else "ms",
+                           None if logical.startswith("local") else "UTC")
+        return pa.array(cols.num[name], type=typ, mask=null_mask)
     if logical == "date":
-        days = cols.num[name].astype("datetime64[D]")
-        out = np.array(days.tolist(), dtype=object)  # datetime.date
-        if has_null:
-            out[mask] = None
-        return pd.Series(out, dtype=object)
+        return pa.array(cols.num[name].astype(np.int32),
+                        type=pa.date32(), mask=null_mask)
     vals = cols.num[name]
     if k in ("long", "int") and out_k in ("float", "double"):
         vals = vals.astype(np.float64 if out_k == "double"
                            else np.float32)
     elif k == "float" and out_k == "double":
         vals = vals.astype(np.float64)
-    if arrow:
-        if out_k == "int":
-            vals = vals.astype(np.int32)
-        return pa.array(vals, mask=mask if has_null else None)
-    if has_null:
-        out = vals.astype(object)
-        if k == "boolean":
-            out = np.array([bool(v) for v in vals], dtype=object)
-        out[mask] = None
-        return pd.Series(out, dtype=object)
-    return pd.Series(vals)
+    elif out_k == "int":
+        vals = vals.astype(np.int32)
+    return pa.array(vals, mask=null_mask)
 
 
 # ---------------------------------------------------------------------------
@@ -958,23 +921,17 @@ def _iter_value_steps(steps):
 
 def decode_blocks_columnar(datas: List[bytes], counts: List[int],
                            name: str, writer_node: Dict,
-                           reader_node: Dict, arrow: bool = False):
+                           reader_node: Dict):
     """Decode already-decompressed block payloads (one bytes per block,
-    ``counts[i]`` rows each) in lock-step -> dict[col, pd.Series] in
-    READER field order, or None when out of coverage / too small.
-    ``arrow=True`` (r14) returns dict[col, pa.Array] instead — no
-    pandas crossing anywhere; the caller feeds ``mapInArrow``.
-    Logical-typed (timestamp/date) plans return None in arrow mode:
-    their session-timezone semantics are pinned to the pandas path."""
-    import pandas as pd
+    ``counts[i]`` rows each) in lock-step -> dict[col, pa.Array] in
+    READER field order, or None when out of coverage / too small. The
+    caller feeds the arrays to ``mapInArrow``."""
+    import pyarrow as pa
 
     plan = _columnar_plan(writer_node, reader_node)
     if plan is None or len(datas) < _MIN_BLOCKS:
         return None
     steps, fills, assemblies = plan
-    if arrow and any(s.get("logical")
-                     for s in _iter_value_steps(steps)):
-        return None  # timestamp/date semantics ride the pandas path
 
     sizes = np.array([len(d) for d in datas], np.int64)
     base = np.zeros(len(datas), np.int64)
@@ -994,8 +951,6 @@ def decode_blocks_columnar(datas: List[bytes], counts: List[int],
             out_pos = row_base[active] + r
             for step in steps:
                 _exec_step(step, buf, pos, active, out_pos, cols)
-    except _VecFallback:
-        return None  # data shape out of coverage — caller goes scalar
     except IndexError:
         raise ValueError(f"{name}: truncated block — varint or "
                          "payload runs past block end") from None
@@ -1007,30 +962,20 @@ def decode_blocks_columnar(datas: List[bytes], counts: List[int],
             f"{name}: {int(base[bad] + sizes[bad] - pos[bad])} trailing "
             "bytes in block — writer/reader schema mismatch")
 
-    raw: Dict[str, Any] = {}
-    for step in _iter_value_steps(steps):
-        try:
-            raw[step["name"]] = _finalize(step, cols, buf, arrow)
-        except UnicodeDecodeError as e:
-            raise ValueError(f"{name}: invalid UTF-8 in column "
-                             f"{step['name']!r}: {e}") from None
+    raw = {step["name"]: _finalize(step, cols, buf)
+           for step in _iter_value_steps(steps)}
     out: Dict[str, Any] = {
         k: v for k, v in raw.items() if "\x1f" not in k}
     if assemblies:
         # rebuild struct columns from their flattened children,
-        # innermost first; sub-struct children stay pa.Arrays until
-        # the top-level struct crosses into pandas once (or, in arrow
-        # mode, never cross at all)
-        import pyarrow as pa
-
+        # innermost first
         built: Dict[str, Any] = {}
 
         def _child(key, dflt):
             if key is None:
                 return (pa.nulls(n) if dflt is None
                         else pa.array([dflt] * n))
-            v = built[key] if key in built else raw[key]
-            return v if isinstance(v, pa.Array) else pa.array(v)
+            return built[key] if key in built else raw[key]
 
         for asm in assemblies:
             mk = asm.get("mask")
@@ -1040,18 +985,9 @@ def decode_blocks_columnar(datas: List[bytes], counts: List[int],
                 mask=pa.array(cols.mask[mk]) if mk else None)
             if "\x1f" in asm["key"]:
                 built[asm["key"]] = arr
-            elif arrow:
-                out[asm["key"]] = arr
             else:
-                out[asm["key"]] = pd.Series(
-                    arr.to_pandas(), dtype=object)
-    if arrow:
-        import pyarrow as pa
-
-        for fname, fval in fills:
-            out[fname] = (pa.nulls(n) if fval is None
-                          else pa.array([fval] * n))
-    else:
-        for fname, fval in fills:
-            out[fname] = pd.Series([fval] * n, dtype=object)
+                out[asm["key"]] = arr
+    for fname, fval in fills:
+        out[fname] = (pa.nulls(n) if fval is None
+                      else pa.array([fval] * n))
     return out

@@ -125,14 +125,6 @@ def main():
         F.col("meta.source").alias("source"),
         F.col("meta.n_chars").alias("n_chars")))
 
-    # same struct corpus through the r14 mapInArrow interchange: the
-    # decoded Arrow buffers cross executor→JVM with no pandas round
-    # trip; values must be identical to the mapInPandas read
-    check("avro+arrow", d, read_avro(spark, d, arrow=True).select(
-        "doc_id", "text", F.col("meta.lang").alias("lang"),
-        F.col("meta.source").alias("source"),
-        F.col("meta.n_chars").alias("n_chars")))
-
     print(f"\n{n} documents through every interchange format:")
     print(f"{'format':<12} {'MB':>8} {'rows':>7}")
     for label, mb, cnt in rows:

@@ -66,10 +66,6 @@ def check(name, got_df, key=("doc_id", "text")):
 d = td + "/avro"
 write_avro(docs, d, shards=1, order_by="doc_id", block_rows=32)
 check("avro sync-marker splits", read_avro_split(spark, d, split_mb=1))
-# r14 mapInArrow interchange: same splits, decoded columns cross as
-# Arrow batches with no pandas round-trip
-check("avro splits (arrow mode)",
-      read_avro_split(spark, d, split_mb=1, arrow=True))
 
 # 2. tfrecord: CRC resync
 d = td + "/tf"

@@ -15,14 +15,15 @@ property at element granularity.
 
 Proxy kernels (no decoder written):
 
-* scalar    — `read_container` on the array<record> file + the
-  row→column pandas crossing (today's path).
+* scalar    — `read_container` on the array<record> file + one
+  ``pa.array`` per column (the readers' scalar fallback; the
+  shipping path before r14).
 * vec_proxy — vectorized decode of the EXPLODED twin (one row per
   element: the same field bytes minus count framing, so slightly
   LESS wire work than the real decoder would do — compensated by
   skipping the per-element count waves the real path would add) +
-  ListArray-of-StructArray assembly from the known counts + the
-  list-of-dicts pandas crossing.
+  ListArray-of-StructArray assembly from the known counts (until the
+  readers went Arrow-only, plus a list-of-dicts pandas crossing).
 
 Decision rule: implement only if vec_proxy clears ~1.5x at both
 sizes; otherwise record the negative result (the maps precedent).
@@ -94,7 +95,6 @@ def _time(fn, reps):
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    import pandas as pd
     import pyarrow as pa
 
     from dataingestion_spark.sources.avro import (
@@ -117,31 +117,23 @@ def main() -> None:
 
         def scalar():
             _, rows = read_container(nested_blob, "probe")
-            return pd.DataFrame(
-                {"id": [r["id"] for r in rows],
-                 "ents": [r["ents"] for r in rows]},
-                columns=["id", "ents"])
+            return {c: pa.array([r[c] for r in rows])
+                    for c in ("id", "ents")}
 
         def vec_proxy():
-            _, cols = read_container_columnar(flat_blob, "probe",
-                                              arrow=True)
+            _, cols = read_container_columnar(flat_blob, "probe")
             assert cols is not None, "exploded twin fell back"
             struct = pa.StructArray.from_arrays(
                 [cols["a"], cols["b"].cast(pa.string())], ["a", "b"])
             lst = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()).cast(pa.int32()),
-                struct)
-            ents = pd.Series(lst.to_pandas(), dtype=object)
-            ids = pd.Series(np.arange(n, dtype=np.int64))
-            return pd.DataFrame({"id": ids, "ents": ents},
-                                columns=["id", "ents"])
+                pa.array(offs, type=pa.int32()), struct)
+            return {"id": pa.array(np.arange(n, dtype=np.int64)),
+                    "ents": lst}
 
         def vec():
             _, cols = read_container_columnar(nested_blob, "probe")
             assert cols is not None, "array<record> fell back"
-            return pd.DataFrame(
-                {"id": cols["id"], "ents": cols["ents"]},
-                columns=["id", "ents"])
+            return cols
 
         sc = _time(scalar, reps)
         vp = _time(vec_proxy, reps)
@@ -149,9 +141,9 @@ def main() -> None:
         a, b, c = scalar(), vec_proxy(), vec()
         # equivalence: same element dicts per row, both kernels
         for i in (1, 3, 9, n - 1):
-            want = a["ents"].iloc[i]
-            assert want == [dict(d) for d in b["ents"].iloc[i]], i
-            assert want == [dict(d) for d in c["ents"].iloc[i]], i
+            want = a["ents"][i].as_py()
+            assert want == b["ents"][i].as_py(), i
+            assert want == c["ents"][i].as_py(), i
         print(json.dumps({
             "kernel": "avro_array_record", "rows": n,
             "mb": round(len(nested_blob) / 1e6, 1),

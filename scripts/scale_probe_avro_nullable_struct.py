@@ -12,15 +12,16 @@ mask natively at assembly.
 
 Proxy kernels (no decoder written yet):
 
-* scalar    — `read_container` on the NULLABLE-nested file + the
-  row→column pandas crossing: today's shipping path (the plan gate
-  declines nullable records to scalar).
+* scalar    — `read_container` on the NULLABLE-nested file + one
+  ``pa.array`` per column: the readers' scalar fallback (the
+  shipping path before r14, when the plan gate declined nullable
+  records).
 * vec_proxy — the r13 vectorized decode of the NON-NULL twin (same
   rows, null structs replaced by a present struct — slightly MORE wire
   bytes than the real nullable file, so the proxy under-states the
   win) + the mask application the real decoder would add: a zigzag
-  branch wave over one byte per row and a masked overwrite of the
-  struct column with None.
+  branch wave over one byte per row and the struct rebuilt under a
+  validity mask.
 * vec       — the SHIPPED r14 path: `read_container_columnar` on the
   nullable file itself (record_group branch wave + masked substeps +
   StructArray mask). Added after the proxy cleared the bar at
@@ -89,7 +90,7 @@ def _time(fn, reps):
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    import pandas as pd
+    import pyarrow as pa
 
     from dataingestion_spark.sources.avro import (
         read_container, read_container_columnar, write_container,
@@ -106,53 +107,41 @@ def main() -> None:
         os.remove(pf)
 
         mask = np.arange(n) % NULL_EVERY == 0
-        null_pos = np.nonzero(mask)[0]
         branch_bytes = np.where(mask, 0, 2).astype(np.uint8)
 
         def scalar():
             _, rows = read_container(nullable_blob, "probe")
-            cols = ["id", "text", "inner"]
-            return pd.DataFrame(
-                {c: [r.get(c) for r in rows] for c in cols},
-                columns=cols)
+            return {c: pa.array([r.get(c) for r in rows])
+                    for c in ("id", "text", "inner")}
 
         def vec_proxy():
-            # r13 non-null struct decode (pandas crossing included)...
+            # r13 non-null struct decode...
             _, cols = read_container_columnar(twin_blob, "probe")
             assert cols is not None, "non-null twin fell back"
             # ...plus the work the nullable decoder would ADD: one
-            # zigzag branch wave over a byte per row and the masked
-            # None overwrite of the struct column
+            # zigzag branch wave over a byte per row and the struct
+            # rebuilt under the validity mask
             b = branch_bytes.astype(np.int64)
             _ = (b >> 1) ^ -(b & 1)  # zigzag wave cost stand-in
-            s = cols["inner"].copy()
-            s[null_pos] = None
-            return pd.DataFrame(
-                {"id": cols["id"], "text": cols["text"], "inner": s},
-                columns=["id", "text", "inner"])
+            inner = cols["inner"]
+            cols["inner"] = pa.StructArray.from_arrays(
+                inner.flatten(), [f.name for f in inner.type],
+                mask=pa.array(mask))
+            return cols
 
         def vec():
             _, cols = read_container_columnar(nullable_blob, "probe")
             assert cols is not None, "nullable struct fell back"
-            return pd.DataFrame(
-                {c: cols[c] for c in ("id", "text", "inner")},
-                columns=["id", "text", "inner"])
+            return cols
 
         sc = _time(scalar, reps)
         vp = _time(vec_proxy, reps)
         vr = _time(vec, reps)
-        # the proxy must produce the scalar result exactly
-        a, b = scalar(), vec_proxy()
-        assert a["inner"].iloc[0] is None or a["inner"].iloc[0] == \
-            b["inner"].iloc[0]
-        assert list(a["inner"].iloc[:10].isna()) == \
-            list(b["inner"].iloc[:10].isna())
-        assert a["inner"].iloc[1] == b["inner"].iloc[1]
-        # shipped path must produce the scalar result exactly
-        c, d = scalar(), vec()
-        assert list(c["inner"].iloc[:50].isna()) == \
-            list(d["inner"].iloc[:50].isna())
-        assert c["inner"].iloc[1] == d["inner"].iloc[1]
+        # the proxy and the shipped path must produce the scalar
+        # result exactly
+        want = scalar()["inner"][:50].to_pylist()
+        assert vec_proxy()["inner"][:50].to_pylist() == want
+        assert vec()["inner"][:50].to_pylist() == want
         print(json.dumps({
             "kernel": "avro_nullable_record", "rows": n,
             "mb": round(len(nullable_blob) / 1e6, 1),

@@ -8,14 +8,14 @@ measurement cleared the ~1.5x bar at 3.2-4.1x) flattens nested records
 into the existing wave plan and assembles a ``pa.StructArray`` from
 the child arrays at finalize. Kernels:
 
-* scalar  — `read_container` on the NESTED file + the parser's
-  row→column pandas conversion (the pre-r13 cost);
+* scalar  — `read_container` on the NESTED file + one ``pa.array``
+  per column (the readers' scalar fallback);
 * vec     — `read_container_columnar` on the nested file: the REAL
-  shipped path, including the struct→dicts pandas crossing that
-  mapInPandas forces (where the r12 map decode lost at 0.8x);
-* vec_pa  — decode of the flat twin + StructArray assembly WITHOUT
-  ``to_pandas``: the Arrow-native floor a mapInArrow interchange
-  would get, recorded for the SCALE.md design note.
+  shipped path, ending at the Arrow arrays the readers hand to
+  ``mapInArrow`` (until the readers went Arrow-only this kernel also
+  paid a struct→dicts pandas crossing);
+* vec_pa  — decode of the flat twin + StructArray assembly: the
+  floor of the flattening design, recorded for the SCALE.md note.
 
 Prints one JSON line per size; paste into SCALE.md.
 
@@ -75,7 +75,6 @@ def _time(fn, reps):
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    import pandas as pd
     import pyarrow as pa
 
     from dataingestion_spark.sources.avro import (
@@ -96,19 +95,15 @@ def main() -> None:
 
         def scalar():
             _, rows = read_container(nested_blob, "probe")
-            cols = ["id", "text", "inner"]
-            return pd.DataFrame(
-                {c: [r.get(c) for r in rows] for c in cols},
-                columns=cols)
+            return {c: pa.array([r.get(c) for r in rows])
+                    for c in ("id", "text", "inner")}
 
-        def vec(to_pandas=True):
+        def vec():
             # the REAL path since r13: decode_blocks_columnar flattens
             # the nested record and assembles the struct at finalize
             _, cols = read_container_columnar(nested_blob, "probe")
             assert cols is not None, "nested record fell back"
-            return pd.DataFrame(
-                {c: cols[c] for c in ("id", "text", "inner")},
-                columns=["id", "text", "inner"])
+            return cols
 
         def vec_proxy_pa():
             # arrow-native floor (no struct→dicts crossing): decode the
@@ -123,7 +118,7 @@ def main() -> None:
         vp = _time(vec_proxy_pa, reps)
         # equivalence spot-check of the proxy itself
         a, b = scalar(), vec()
-        assert a["inner"].iloc[5] == b["inner"].iloc[5]
+        assert a["inner"][5].as_py() == b["inner"][5].as_py()
         print(json.dumps({
             "kernel": "avro_nested_record", "rows": n,
             "mb": round(len(nested_blob) / 1e6, 1),

@@ -193,10 +193,11 @@ def test_split_reader_schema_mismatch_loud(spark, tmp_path):
 
 
 def test_arrow_interchange_ipc_readers(spark, tmp_path):
-    """r14 mapInArrow opt-in for the Arrow-native format: the file's
-    own RecordBatches ship straight to the JVM. Both the whole-file
-    and footer-indexed split readers must match their mapInPandas
-    twins row-for-row; timestamp schemas route back to pandas."""
+    """The file's own RecordBatches ship straight to the JVM. Both the
+    whole-file and footer-indexed split readers must return the SOURCE
+    frame row for row (nullable doubles, arrays, timestamps), and the
+    files must hold the source values."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.arrow_ipc import (
@@ -208,30 +209,26 @@ def test_arrow_interchange_ipc_readers(spark, tmp_path):
         F.sha2(F.col("id").cast("string"), 256).alias("text"),
         F.when(F.col("id") % 7 != 0,
                (F.col("id") * 0.5)).alias("score"),
-        F.array(F.col("id").cast("float"), F.lit(2.5)).alias("emb"))
+        F.array(F.col("id").cast("float"), F.lit(2.5)).alias("emb"),
+        F.timestamp_micros(F.col("id") * 1_000_003).alias("ts"))
     d = str(tmp_path / "ipc")
     write_arrow_ipc(docs, d, shards=2, order_by="doc_id")
-    a = read_arrow_ipc(spark, d).orderBy("doc_id").collect()
-    b = read_arrow_ipc(spark, d, arrow=True).orderBy("doc_id") \
-        .collect()
-    assert a == b and len(a) == 20_000
-    sp = read_arrow_ipc_split(spark, d, split_mb=1) \
+    want = docs.orderBy("doc_id").collect()
+    whole = read_arrow_ipc(spark, d).orderBy("doc_id").collect()
+    split = read_arrow_ipc_split(spark, d, split_mb=1) \
         .orderBy("doc_id").collect()
-    sa = read_arrow_ipc_split(spark, d, split_mb=1, arrow=True) \
-        .orderBy("doc_id").collect()
-    assert a == sp == sa
+    assert whole == split == want and len(want) == 20_000
 
-    # column projection through arrow mode
-    pr = read_arrow_ipc(spark, d, columns=["doc_id", "score"],
-                        arrow=True).orderBy("doc_id").collect()
+    on_disk = pa.concat_tables(
+        pa.ipc.open_file(os.path.join(d, n)).read_all()
+        for n in sorted(os.listdir(d))).sort_by("doc_id")
+    assert on_disk.column("score").to_pylist() == [r["score"]
+                                                   for r in want]
+    assert on_disk.column("ts").cast(pa.int64()).to_pylist() == [
+        i * 1_000_003 for i in range(20_000)]
+
+    # column projection
+    pr = read_arrow_ipc(spark, d, columns=["doc_id", "score"]) \
+        .orderBy("doc_id").collect()
     assert pr[3]["score"] == 1.5 and len(pr[0]) == 2
 
-    # timestamp schema: arrow=True must still equal the pandas read
-    ts = spark.range(500).select(
-        F.col("id").alias("k"),
-        F.timestamp_micros(F.col("id") * 1_000_003).alias("ts"))
-    d2 = str(tmp_path / "ipc_ts")
-    write_arrow_ipc(ts, d2, shards=1, order_by="k")
-    x = read_arrow_ipc(spark, d2).orderBy("k").collect()
-    y = read_arrow_ipc(spark, d2, arrow=True).orderBy("k").collect()
-    assert x == y and len(x) == 500

@@ -45,8 +45,15 @@ def _wide_rows(n, seed=7):
     return rows
 
 
+def _pylists(cols):
+    """The columnar decoder's {column: pa.Array} as python lists."""
+    return None if cols is None else {
+        c: a.to_pylist() for c, a in cols.items()}
+
+
 def _vec(tmp_path, schema, rows, reader_node=None, codec="null",
          block_rows=8):
+    """(columnar decode as python lists, scalar decoder rows)."""
     p = str(tmp_path / "t.avro")
     write_container(p, schema, rows, codec=codec,
                     block_rows=block_rows)
@@ -54,13 +61,13 @@ def _vec(tmp_path, schema, rows, reader_node=None, codec="null",
     node, cols = read_container_columnar(blob, p,
                                          reader_node=reader_node)
     _, scalar = read_container(blob, p, reader_node=reader_node)
-    return cols, scalar
+    return _pylists(cols), scalar
 
 
 def _assert_equal(cols, scalar_rows, names, approx=()):
     assert cols is not None, "vector path unexpectedly fell back"
     for c in names:
-        got = [None if v is None else v for v in cols[c]]
+        got = cols[c]
         want = [r.get(c) for r in scalar_rows]
         if c in approx:
             got = [None if v is None else round(float(v), 4)
@@ -169,17 +176,21 @@ def test_timestamp_and_date_logicals(tmp_path):
              else pd.Timestamp((base + i * 1_000_003) * 1000),
              "day": datetime.date.fromordinal(719_163 + 19_000 + i % 400)}
             for i in range(600)]
+    import pyarrow as pa
+
     p = str(tmp_path / "t.avro")
     write_container(p, sch, rows, block_rows=8)
     blob = open(p, "rb").read()
     _, cols = read_container_columnar(blob, p)
     _, scalar = read_container(blob, p)
     assert cols is not None
-    import pandas as pd
-    for i, r in enumerate(scalar):
-        v = cols["ts"].iloc[i]
-        assert (r["ts"] is None and pd.isna(v)) or v == r["ts"]
-        assert cols["day"].iloc[i] == r["day"]
+    # timestamps are UTC instants in the wire's unit, dates date32
+    assert cols["ts"].type == pa.timestamp("us", "UTC")
+    assert cols["day"].type == pa.date32()
+    assert cols["ts"].cast(pa.int64()).to_pylist() == [
+        None if r["ts"] is None else r["ts"].value // 1000
+        for r in scalar]
+    assert cols["day"].to_pylist() == [r["day"] for r in scalar]
 
 
 def test_spark_read_uses_columnar(spark, tmp_path):
@@ -224,15 +235,11 @@ def test_differential_fixed_width_arrays(tmp_path):
     assert cols is not None
     import numpy as np
     for i, r in enumerate(scalar):
-        got = cols["emb"].iloc[i]
+        got = cols["emb"][i]
         assert np.allclose(np.asarray(got, dtype=np.float32),
                            np.array(r["emb"], dtype=np.float32))
-        s = cols["scores"].iloc[i]
-        if r["scores"] is None:
-            assert s is None
-        else:
-            assert list(s) == r["scores"]
-        assert [bool(b) for b in cols["flags"].iloc[i]] == r["flags"]
+        assert cols["scores"][i] == r["scores"]
+        assert cols["flags"][i] == r["flags"]
     assert list(cols["doc_id"]) == [r["doc_id"] for r in scalar]
 
 
@@ -278,8 +285,7 @@ def test_multiblock_array_decodes_vectorized(tmp_path):
     assert rows[0]["xs"] == [1.5, 2.5, 3.5] and len(rows) == 70
     node, cols = read_container_columnar(blob, "mb")
     assert cols is not None, "multi-block arrays fell back"
-    for i in range(70):
-        assert list(cols["xs"].iloc[i]) == [1.5, 2.5, 3.5]
+    assert cols["xs"].to_pylist() == [[1.5, 2.5, 3.5]] * 70
 
 
 def test_negative_count_array_block_decodes(tmp_path):
@@ -308,8 +314,7 @@ def test_negative_count_array_block_decodes(tmp_path):
     assert rows[0]["xs"] == [4.5, 5.5]
     node, cols = read_container_columnar(blob, "neg")
     assert cols is not None
-    assert list(cols["xs"].iloc[0]) == [4.5, 5.5]
-    assert len(cols["xs"]) == 70
+    assert cols["xs"].to_pylist() == [[4.5, 5.5]] * 70
 
 
 def test_spark_embedding_corpus_roundtrip(spark, tmp_path):
@@ -678,14 +683,8 @@ def test_differential_string_arrays(tmp_path):
         })
     cols, scalar = _vec(tmp_path, STR_ARR, rows)
     assert cols is not None, "array<string> fell back"
-    for i, r in enumerate(scalar):
-        assert list(cols["tokens"].iloc[i]) == r["tokens"]
-        got = cols["raws"].iloc[i]
-        if r["raws"] is None:
-            assert got is None
-        else:
-            assert [bytes(b) for b in got] == r["raws"]
-    assert list(cols["doc_id"]) == [r["doc_id"] for r in scalar]
+    for c in ("doc_id", "tokens", "raws"):
+        assert cols[c] == [r[c] for r in scalar], c
 
 
 def test_string_array_multiblock_decodes_vectorized(tmp_path):
@@ -717,8 +716,7 @@ def test_string_array_multiblock_decodes_vectorized(tmp_path):
     blob.extend(block * 70)  # 70 identical blocks >= _MIN_BLOCKS
     node, cols = read_container_columnar(bytes(blob), "mb")
     assert cols is not None, "multi-block string arrays fell back"
-    assert list(cols["xs"].iloc[0]) == ["a", "b"]
-    assert list(cols["xs"].iloc[-1]) == ["a", "b"]
+    assert cols["xs"].to_pylist() == [["a", "b"]] * (70 * 70)
     _, rows = read_container(bytes(blob), "mb")
     assert rows[0]["xs"] == ["a", "b"] and len(rows) == 70 * 70
 
@@ -751,7 +749,7 @@ def test_string_array_negative_count_block(tmp_path):
     blob.extend(block * 70)
     node, cols = read_container_columnar(bytes(blob), "neg")
     assert cols is not None
-    assert list(cols["xs"].iloc[0]) == ["xy", "", "zzz"]
+    assert cols["xs"].to_pylist() == [["xy", "", "zzz"]] * 70
     _, rows = read_container(bytes(blob), "neg")
     assert rows[0]["xs"] == ["xy", "", "zzz"]
 
@@ -806,14 +804,14 @@ def test_multiblock_random_splits_differential(tmp_path):
     _, rows = read_container(bytes(blob), "rnd")
     node, cols = read_container_columnar(bytes(blob), "rnd")
     assert cols is not None
+    cols = _pylists(cols)
     import numpy as np
     for i, (rid, xs, ts) in enumerate(want):
-        assert rows[i]["id"] == rid and cols["id"].iloc[i] == rid
-        assert np.allclose(np.asarray(list(cols["xs"].iloc[i]),
-                                      dtype=np.float32),
+        assert rows[i]["id"] == rid and cols["id"][i] == rid
+        assert np.allclose(np.asarray(cols["xs"][i], dtype=np.float32),
                            np.array(xs, dtype=np.float32))
         assert rows[i]["ts"] == ts
-        assert list(cols["ts"].iloc[i]) == ts
+        assert cols["ts"][i] == ts
 
 
 # ---------------------------------------------------------------------------
@@ -1261,11 +1259,10 @@ def test_nullable_record_spark_roundtrip(spark, tmp_path):
 
 
 def test_arrow_interchange_differential(spark, tmp_path):
-    """r14 mapInArrow opt-in: read_avro(arrow=True) must return
-    row-for-row what the mapInPandas contract returns, across flat
-    scalars+enum+fixed, array<float>/array<string>, and nullable
-    structs — including a file below the block gate (scalar fallback
-    through pa.array)."""
+    """read_avro's mapInArrow parse must return the SOURCE frame row
+    for row across flat scalars, array<float>/array<string> and
+    nullable structs — through the vectorized decoder and through a
+    file below the block gate (scalar fallback via pa.array)."""
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.avro import read_avro, write_avro
@@ -1283,25 +1280,23 @@ def test_arrow_interchange_differential(spark, tmp_path):
                 F.lit("tok")).alias("toks"))
     d = str(tmp_path / "shards")
     write_avro(docs, d, shards=2, order_by="doc_id", block_rows=16)
-    a = read_avro(spark, d).orderBy("doc_id").collect()
-    b = read_avro(spark, d, arrow=True).orderBy("doc_id").collect()
-    assert len(a) == len(b) == 4000
-    assert a == b
+    want = docs.orderBy("doc_id").collect()
+    got = read_avro(spark, d).orderBy("doc_id").collect()
+    assert len(got) == 4000 and got == want
 
     # below the block gate: scalar decode crosses via pa.array
     small = str(tmp_path / "small")
-    write_avro(docs.limit(50), small, shards=1, order_by="doc_id",
+    few = docs.where(F.col("doc_id") < 50)
+    write_avro(few, small, shards=1, order_by="doc_id",
                block_rows=1024)
-    sa = read_avro(spark, small).orderBy("doc_id").collect()
-    sb = read_avro(spark, small, arrow=True).orderBy("doc_id") \
-        .collect()
-    assert sa == sb and len(sa) == 50
+    got = read_avro(spark, small).orderBy("doc_id").collect()
+    assert len(got) == 50 and got == few.orderBy("doc_id").collect()
 
 
 def test_arrow_interchange_enum_fixed_and_resolution(tmp_path):
-    """Unit-level arrow decode: enum (dictionary cast), fixed, and
+    """Unit-level columnar decode: enum (dictionary cast), fixed, and
     reader-side resolution (default fill + promotion) return
-    pa.Arrays equal to the pandas path's values."""
+    pa.Arrays equal to the scalar resolver's values."""
     import pyarrow as pa
 
     from dataingestion_spark.sources.avro import (
@@ -1319,38 +1314,41 @@ def test_arrow_interchange_enum_fixed_and_resolution(tmp_path):
         {"name": "fx", "type": {"type": "fixed", "name": "fx8",
                                 "size": 4}},
         {"name": "added", "type": "string", "default": "dflt"}]})
-    _, acols = read_container_columnar(blob, p, reader_node=reader,
-                                       arrow=True)
-    _, pcols = read_container_columnar(blob, p, reader_node=reader)
-    assert acols is not None and pcols is not None
+    _, acols = read_container_columnar(blob, p, reader_node=reader)
+    _, scalar = read_container(blob, p, reader_node=reader)
+    assert acols is not None
     for c in ("id", "color", "fx", "added"):
         assert isinstance(acols[c], pa.Array), c
-        assert acols[c].to_pylist() == list(pcols[c]), c
+        assert acols[c].to_pylist() == [r[c] for r in scalar], c
 
 
-def test_arrow_interchange_timestamps_use_pandas_path(spark, tmp_path):
-    """Schemas with timestamp logicals route arrow=True back to the
-    mapInPandas contract — values must match the pandas read exactly
-    (session-timezone semantics are the serializer's)."""
+def test_arrow_interchange_timestamps(spark, tmp_path):
+    """Timestamp and date logicals ride the same mapInArrow parse as
+    every other type: the read equals the source frame, nulls
+    included, through the vectorized decoder and the scalar
+    fallback."""
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.avro import read_avro, write_avro
 
     docs = spark.range(2000).select(
         F.col("id").alias("k"),
-        F.timestamp_micros(F.col("id") * 1_000_003).alias("ts"))
-    d = str(tmp_path / "ts")
-    write_avro(docs, d, shards=1, order_by="k", block_rows=16)
-    a = read_avro(spark, d).orderBy("k").collect()
-    b = read_avro(spark, d, arrow=True).orderBy("k").collect()
-    assert a == b and len(a) == 2000
+        F.timestamp_micros(F.col("id") * 1_000_003).alias("ts"),
+        F.when(F.col("id") % 3 != 0, F.date_from_unix_date(
+            F.col("id").cast("int"))).alias("day"))
+    want = docs.orderBy("k").collect()
+    for block_rows in (16, 1024):  # 125 blocks vs 2 (< the gate)
+        d = str(tmp_path / f"ts{block_rows}")
+        write_avro(docs, d, shards=1, order_by="k",
+                   block_rows=block_rows)
+        assert read_avro(spark, d).orderBy("k").collect() == want
 
 
 def test_arrow_interchange_split_reader(spark, tmp_path):
-    """read_avro_split(arrow=True): every split's decoded columns
-    cross as one Arrow batch; results equal the mapInPandas split
-    read AND the whole-file read, including splits that straddle
-    member boundaries (1 MB splits over a multi-MB shard)."""
+    """read_avro_split: every split's decoded columns cross as one
+    Arrow batch; results equal the SOURCE frame and the whole-file
+    read, including splits that straddle block boundaries (1 MB
+    splits over a multi-MB shard)."""
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.avro import (
@@ -1365,13 +1363,12 @@ def test_arrow_interchange_split_reader(spark, tmp_path):
             F.col("id").cast("string").alias("b"))).alias("meta"))
     d = str(tmp_path / "shards")
     write_avro(docs, d, shards=2, order_by="doc_id", block_rows=64)
+    want = docs.orderBy("doc_id").collect()
     whole = read_avro(spark, d).orderBy("doc_id").collect()
     sp = read_avro_split(spark, d, split_mb=1).orderBy("doc_id") \
         .collect()
-    sa = read_avro_split(spark, d, split_mb=1, arrow=True) \
-        .orderBy("doc_id").collect()
-    assert whole == sp == sa
-    assert len(sa) == 60_000
+    assert whole == sp == want
+    assert len(sp) == 60_000
 
 
 ARRAY_REC_SCH = {"type": "record", "name": "r", "fields": [
@@ -1507,8 +1504,8 @@ def test_array_of_records_multiblock_and_nullable_array(tmp_path):
 
 def test_array_of_records_spark_roundtrip(spark, tmp_path):
     """array<struct> columns through write_avro/read_avro land as
-    Spark ArrayType(StructType) rows via the vectorized decode, in
-    BOTH pandas and arrow interchange modes."""
+    Spark ArrayType(StructType) rows via the vectorized decode, equal
+    to the source frame."""
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.avro import read_avro, write_avro
@@ -1524,8 +1521,7 @@ def test_array_of_records_spark_roundtrip(spark, tmp_path):
     d = str(tmp_path / "arr_structs")
     write_avro(docs, d, shards=1, order_by="doc_id", block_rows=16)
     a = read_avro(spark, d).orderBy("doc_id").collect()
-    b = read_avro(spark, d, arrow=True).orderBy("doc_id").collect()
-    assert a == b and len(a) == 3000
+    assert a == docs.orderBy("doc_id").collect() and len(a) == 3000
     got = {r["doc_id"]: r["ents"] for r in a}
     assert got[5] == []
     assert got[7][0]["a"] == 14 and got[7][1]["b"] == "x"
@@ -1701,7 +1697,7 @@ def test_encoder_array_record_byte_identity(tmp_path, codec):
 
 def test_encoder_array_record_spark_roundtrip(spark, tmp_path):
     """write_avro of an array<struct> frame goes vectorized encode →
-    vectorized decode; roundtrip exact in both interchange modes."""
+    vectorized decode; the roundtrip equals the source frame."""
     from pyspark.sql import functions as F
 
     from dataingestion_spark.sources.avro import read_avro, write_avro
@@ -1716,7 +1712,6 @@ def test_encoder_array_record_spark_roundtrip(spark, tmp_path):
     d = str(tmp_path / "enc_arr")
     write_avro(docs, d, shards=1, order_by="doc_id", block_rows=64)
     a = read_avro(spark, d).orderBy("doc_id").collect()
-    b = read_avro(spark, d, arrow=True).orderBy("doc_id").collect()
-    assert a == b and len(a) == 4000
+    assert a == docs.orderBy("doc_id").collect() and len(a) == 4000
     got = {r["doc_id"]: r["ents"] for r in a}
     assert got[5] == [] and got[7][0]["a"] == 14

@@ -1,0 +1,88 @@
+"""Exactness at the Avro and Arrow IPC boundaries: values that a
+pandas crossing would change — nullable longs above 2^53 and
+timestamps under a non-UTC session time zone — must reach the files
+and come back unchanged."""
+
+import os
+
+from pyspark.sql import functions as F
+
+from dataingestion_spark.sources.arrow_ipc import (
+    read_arrow_ipc, read_arrow_ipc_split, write_arrow_ipc,
+)
+from dataingestion_spark.sources.avro import (
+    read_avro, read_avro_split, read_container, write_avro,
+)
+
+_TZ = "spark.sql.session.timeZone"
+
+
+def test_nullable_longs_above_2_53_roundtrip(spark, tmp_path):
+    """A nullable long column travels as float64 through pandas, which
+    rounds 2^60 + 1 to 2^60; both writers must store it exactly."""
+    df = spark.range(1000).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 5 != 0,
+               F.lit(2 ** 60) + F.col("id")).alias("big"))
+    want = {k: None if k % 5 == 0 else 2 ** 60 + k for k in range(1000)}
+
+    av, ipc = str(tmp_path / "avro"), str(tmp_path / "ipc")
+    write_avro(df, av, shards=2, order_by="k", block_rows=8)
+    write_arrow_ipc(df, ipc, shards=2, order_by="k")
+    for back in (read_avro(spark, av), read_arrow_ipc(spark, ipc)):
+        assert {r["k"]: r["big"] for r in back.collect()} == want
+
+
+def test_timestamps_keep_instants_under_non_utc_session(spark, tmp_path):
+    """Written under America/Los_Angeles, the files hold the source
+    instants; read back under Los Angeles and Kolkata, every reader
+    returns the source ``unix_micros`` — through the vectorized Avro
+    decoder (125 blocks) and its scalar fallback (2 blocks), top-level
+    and inside a struct."""
+    import pyarrow as pa
+
+    base = 1_600_000_001_000_003
+    ts = F.timestamp_micros(F.lit(base) + F.col("id") * 1_000_003)
+    src = spark.range(2000).select(
+        F.col("id").alias("k"), ts.alias("ts"),
+        F.struct(ts.alias("t")).alias("st"))
+    want = [base + k * 1_000_003 for k in range(2000)]
+
+    prev = spark.conf.get(_TZ)
+    try:
+        spark.conf.set(_TZ, "America/Los_Angeles")
+        avro_dirs = []
+        for block_rows in (16, 1024):
+            d = str(tmp_path / f"avro{block_rows}")
+            write_avro(src, d, shards=1, order_by="k",
+                       block_rows=block_rows)
+            avro_dirs.append(d)
+            (name,) = os.listdir(d)
+            _, rows = read_container(open(os.path.join(d, name),
+                                          "rb").read())
+            assert [r["ts"].value // 1000 for r in rows] == want
+            assert [r["st"]["t"].value // 1000 for r in rows] == want
+        ipc = str(tmp_path / "ipc")
+        write_arrow_ipc(src, ipc, shards=1, order_by="k",
+                        batch_rows=256)
+        (name,) = os.listdir(ipc)
+        tbl = pa.ipc.open_file(os.path.join(ipc, name)).read_all()
+        assert tbl.column("ts").cast(pa.int64()).to_pylist() == want
+        st = tbl.column("st").combine_chunks().field("t")
+        assert st.cast(pa.int64()).to_pylist() == want
+
+        for tz in ("America/Los_Angeles", "Asia/Kolkata"):
+            spark.conf.set(_TZ, tz)
+            readers = [read_arrow_ipc(spark, ipc),
+                       read_arrow_ipc_split(spark, ipc, split_mb=1)]
+            for d in avro_dirs:
+                readers += [read_avro(spark, d),
+                            read_avro_split(spark, d, split_mb=1)]
+            for back in readers:
+                got = back.select(F.unix_micros("ts").alias("u"),
+                                  F.unix_micros("st.t").alias("v")) \
+                    .orderBy("u").collect()
+                assert [r["u"] for r in got] == want, tz
+                assert [r["v"] for r in got] == want, tz
+    finally:
+        spark.conf.set(_TZ, prev)

@@ -7,6 +7,8 @@ batch aggregation; the processor's pure semantics stay unit-tested
 against a fake MapState as well.
 """
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -189,10 +191,18 @@ def test_live_value_list_timer_state_protocol(spark):
     )
     q = (out.writeStream.outputMode("update").format("memory")
          .queryName("tws_protocol_test").trigger(availableNow=True).start())
-    q.awaitTermination(240)
-    assert q.exception() is None
-    got = {r.user_id: r for r in spark.table("tws_protocol_test").collect()}
     ev_b = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    n_users = ev_b.select("user_id").distinct().count()
+    # ProcessingTime mode always plans another (no-data) batch, so this
+    # availableNow query never terminates on its own: wait until the data
+    # batch has landed in the memory sink (one row per user), then stop.
+    deadline = time.monotonic() + 240
+    while (q.isActive and time.monotonic() < deadline
+           and spark.table("tws_protocol_test").count() < n_users):
+        time.sleep(0.5)
+    assert q.exception() is None
+    q.stop()
+    got = {r.user_id: r for r in spark.table("tws_protocol_test").collect()}
     want = {r.user_id: (r.n, r.nv) for r in
             ev_b.groupBy("user_id").agg(
                 F.count("*").alias("n"),
