@@ -38,6 +38,7 @@ from typing import List
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..partitioning import local_frame
 from .similarity import _rank_topk
 
 __all__ = ["pq_train", "pq_encode", "topk_pq_adc", "topk_ivf_pq"]
@@ -203,8 +204,8 @@ def _adc_lut_df(queries: DataFrame, codebooks: List[List[List[float]]],
     from pyspark.sql import types as T
 
     id_type = queries.schema[query_id].dataType
-    return spark.createDataFrame(
-        [(r[0], lut_for(r[1])) for r in qrows],
+    return local_frame(
+        spark, [(r[0], lut_for(r[1])) for r in qrows],
         T.StructType([
             T.StructField(query_id, id_type),
             T.StructField("_lut", T.ArrayType(T.ArrayType(T.DoubleType()))),
@@ -321,8 +322,8 @@ def topk_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 10,
         qv, cv = qvecs[r[0]], cmap[r[1]]
         qres_rows.append((r[0], int(r[1]),
                           [a - b for a, b in zip(qv, cv)]))
-    qres = spark.createDataFrame(
-        qres_rows,
+    qres = local_frame(
+        spark, qres_rows,
         T.StructType([
             T.StructField(query_id, id_type),
             T.StructField("centroid_id", T.IntegerType()),

@@ -20,9 +20,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
-from ..partitioning import fan_out
+from ..partitioning import fan_out, local_frame
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -437,14 +437,21 @@ def topk_cosine_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         query_id, query_vec)
 
 
+_CENTROIDS = T.StructType([
+    T.StructField("centroid_id", T.LongType()),
+    T.StructField("cvec", T.ArrayType(T.DoubleType())),
+])
+
+
 def _centroid_frame(spark, centroids: list) -> DataFrame:
     """The one way centroids enter a plan: a driver list of ``(id,
-    vector)`` becomes the broadcastable ``(centroid_id, cvec)`` frame.
-    Ids go through ``int()`` so a non-numeric id fails here, loudly —
-    the probe and assignment tie-breaks order (and negate) them."""
-    return spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        ["centroid_id", "cvec"])
+    vector)`` becomes the broadcastable ``(centroid_id, cvec)`` local
+    frame. Ids go through ``int()`` so a non-numeric id fails here,
+    loudly — the probe and assignment tie-breaks order (and negate)
+    them."""
+    return local_frame(
+        spark, [(int(c), [float(x) for x in v]) for c, v in centroids],
+        _CENTROIDS)
 
 
 def _probe(queries: DataFrame, cents: DataFrame, n_probe: int,
@@ -578,8 +585,6 @@ def _quantize_materialized(df: DataFrame, vec_col: str, qcol: str,
     Same math as :func:`quantize_embeddings`: identical IEEE float64
     ops in identical order, so the codes agree bit-for-bit."""
     import numpy as np
-
-    from pyspark.sql import types as T
 
     out_schema = T.StructType(
         list(df.schema.fields)

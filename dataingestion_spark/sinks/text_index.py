@@ -28,10 +28,13 @@ Search feeds the stored postings and doclens to the same scorer
 index search returns bit-identical results to the from-scratch operator
 on the same corpus.
 
-Query terms are collected driver-side to build literal pruning
-predicates: a query batch is user input (thousands of rows at most),
-metadata-scale by construction — same stance as the centroid collects in
-``similarity.py``.
+A search collects its ``(query_id, term)`` rows once, as Arrow: a
+query batch is user input (thousands of rows at most), metadata-scale by
+construction. The same rows give the literal ``tb IN (…)`` and
+``term IN (…)`` pruning predicates and come back as a driver-local
+frame (``partitioning.local_frame``) for the scorer, so the user's query
+frame is scanned once per search — the same stance as the probe collect
+in ``vector_index.py``.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ import zlib
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.text_search import _bm25_rank, _query_terms, _tokens
+from ..partitioning import local_frame
 
 _N_TERM_BUCKETS = 64
 
@@ -130,9 +134,11 @@ def search_text_index(spark, path: str, queries: DataFrame, k: int = 10,
     ``(query_id, rank, doc_id, score)``, scored by
     ``text_search.bm25_topk``'s own scorer — bit-identical to it on the
     same corpus."""
-    qterms = _query_terms(queries, query_id_col, query_text_col)
     doclens = spark.read.parquet(os.path.join(path, "doclens"))
-    terms = sorted({r["term"] for r in qterms.select("term").collect()})
+    qterms = _query_terms(queries, query_id_col, query_text_col)
+    rows = qterms.toArrow()
+    qterms = local_frame(spark, rows, qterms.schema)
+    terms = sorted(set(rows.column("term").to_pylist()))
     if not terms:
         # empty schema mirrors the live one — doc_id keeps the INDEX's id
         # type, not a hardcoded long
@@ -157,8 +163,11 @@ def hybrid_search_indexed(spark, text_path: str, ivf_path: str,
     top-``per_side_k`` from the inverted index (partition+row-group
     pruned postings) fused with ANN top-``per_side_k`` from the IVF
     index (probe-as-partition-pruning) by reciprocal-rank fusion —
-    neither side rescans the corpus, so serve cost tracks query load,
-    not table size. With ``n_probe`` >= the index's centroid count the
+    neither side re-tokenizes or rescores the corpus. Serve cost does
+    not yet track query load alone: the BM25 side still reads all of
+    ``doclens/`` twice per query (the N/avgdl aggregate and the ``dl``
+    join); a corpus-stats sidecar written at build and append time is
+    the fix. With ``n_probe`` >= the index's centroid count the
     result is bit-identical to the non-indexed
     ``bm25_topk``+``topk_cosine``+``rrf_fuse`` composition (pinned in
     tests); lower ``n_probe`` trades vector-side recall for pruning,
@@ -168,14 +177,16 @@ def hybrid_search_indexed(spark, text_path: str, ivf_path: str,
     from .vector_index import search_ivf_index
 
     # The two sides are independent until the fuse, and each blocks the
-    # driver on its own small prep jobs while it is CONSTRUCTED (the
-    # BM25 side collects the query terms for pruning literals; the IVF
-    # side checkpoints + collects its probe set). Building them from two
-    # driver threads overlaps those jobs (§2.6 — Spark runs concurrent
-    # jobs fine; FIFO back-fills the idle slots), so serve latency pays
-    # max(side preps) instead of their sum: 0.35 s per query on a
-    # sf0.01-document, 16-list index, 20 of 20 interleaved pairs. Frame
-    # construction only — the fused query itself stays one plan/action.
+    # driver on its own small prep jobs while it is CONSTRUCTED: the
+    # parquet schema reads, and one collect each as Arrow — the BM25
+    # side's query terms, the IVF side's probes (pruning literals plus
+    # a driver-local frame). Building them from two driver threads
+    # overlaps those jobs (§2.6 — Spark runs concurrent jobs fine; FIFO
+    # back-fills the idle slots), so serve latency pays max(side preps)
+    # instead of their sum: 0.35 s per query on a sf0.01-document,
+    # 16-list index, 20 of 20 interleaved pairs (measured with the
+    # earlier checkpoint-based preps). Frame construction only — the
+    # fused query itself stays one plan/action.
     bm, cos = _run_concurrently(
         spark,
         lambda: search_text_index(spark, text_path, text_queries,

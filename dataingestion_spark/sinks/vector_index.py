@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.similarity import (
     _centroid_frame, _probe, _score_lists, ivf_assign, train_centroids,
 )
+from ..partitioning import local_frame
 
 Centroid = Tuple[int, List[float]]
 
@@ -88,20 +89,22 @@ def _probed_lists(spark: SparkSession, path: str, queries: DataFrame,
                   n_probe: int, query_id: str, query_vec: str,
                   keep_vec: bool):
     """``(probes, lists)``: each query's probed lists, and the ``lists/``
-    scan pruned to them. The probes are checkpointed because they feed
-    both the collect of their ids and the scoring join; the ids become a
-    literal ``centroid_id IN (…)`` filter, which prunes at file listing
-    (Spark's dynamic partition pruning does not: its runtime filter
-    folds to true in the final adaptive plan and every list is read)."""
+    scan pruned to them. The probes are collected once, as Arrow, and
+    come back as a driver-local frame: the scoring join reads those rows
+    from the plan, so the user's query frame is scanned by this one job
+    only. Their ids become a literal ``centroid_id IN (…)`` filter,
+    which prunes at file listing (Spark's dynamic partition pruning
+    does not: its runtime filter folds to true in the final adaptive
+    plan and every list is read)."""
     probes = _probe(queries, _centroid_frame(spark, load_centroids(path)),
                     n_probe, query_id, query_vec)
     if not keep_vec:
         probes = probes.select(query_id, "centroid_id")
-    probes = probes.localCheckpoint(eager=True)
-    probe_ids = sorted({int(r[0]) for r in probes.select("centroid_id").collect()})
+    rows = probes.toArrow()
+    probe_ids = sorted(set(rows.column("centroid_id").to_pylist()))
     lists = (spark.read.parquet(os.path.join(path, "lists"))
              .filter(F.col("centroid_id").isin(probe_ids)))
-    return probes, lists
+    return local_frame(spark, rows, probes.schema), lists
 
 
 def build_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,

@@ -21,9 +21,11 @@ PNG/JPEG codecs):
 Scale shape: TFRecord files are NOT splittable (no sync markers or
 index), so parallelism = file count — exactly how TF pipelines shard
 them (many ~100-500 MB files). The reader is one task per file
-(``binaryFile`` scan + ``mapInPandas``), the writer one task per shard
+(``binaryFile`` scan + ``mapInArrow``), the writer one task per shard
 (hash-sharded, deterministic order within a shard — same layout
-contract as the WebDataset sink). Every record's CRCs are verified on
+contract as the WebDataset sink). Rows cross the Python boundary as
+Arrow in both directions, so int64 features stay exact above 2^53 and a
+float NaN stays distinct from NULL. Every record's CRCs are verified on
 read; corruption fails loudly rather than yielding silent garbage.
 """
 
@@ -653,7 +655,7 @@ def read_tfrecord(spark: SparkSession, path: str,
     Compression contract: GZIP-compressed shards (TF's
     ``TFRecordOptions(compression_type='GZIP')``, conventionally
     ``*.tfrecord.gz``) are detected per file by the ``1f 8b`` magic —
-    not by extension — decompressed in the same ``mapInPandas`` pass
+    not by extension — decompressed in the same ``mapInArrow`` pass
     (multi-member streams included), and CRC-verified on the
     decompressed frames, which is where TF puts the CRCs too. ZLIB
     streams (``78 xx``) are also accepted. A gzip'd file is a single
@@ -663,34 +665,48 @@ def read_tfrecord(spark: SparkSession, path: str,
     scan = (spark.read.format("binaryFile")
             .option("pathGlobFilter", glob).load(path)
             .select("path", "content"))
-    return scan.mapInPandas(parse, schema)
+    return scan.mapInArrow(parse, schema)
 
 
-def _example_parser(features: Dict[str, str], verify_crc: bool):
-    """(mapInPandas parse fn, output schema) over (path, content) rows
-    — shared by the batch scan and the streaming landing-dir tail so
-    the decode contract cannot drift between them."""
+def _output_schema(features: Dict[str, str]):
+    """(sorted feature spec, output schema ``_file`` + one column per
+    feature); rejects unknown kinds."""
     bad = {k: v for k, v in features.items() if v not in FEATURE_KINDS}
     if bad:
         raise ValueError(f"unknown feature kinds: {bad}")
-    out_fields = [T.StructField("_file", T.StringType())] + [
-        T.StructField(n, _SPARK_TYPES[k]) for n, k in sorted(features.items())
-    ]
-    schema = T.StructType(out_fields)
     spec = sorted(features.items())
+    return spec, T.StructType(
+        [T.StructField("_file", T.StringType())]
+        + [T.StructField(n, _SPARK_TYPES[k]) for n, k in spec])
+
+
+def _row_batch(rows: List[Dict], schema):
+    """Decoded row dicts as one RecordBatch of ``schema`` (executor
+    side): ints stay int64 and NaN stays NaN, nulls stay nulls."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(schema))
+
+
+def _example_parser(features: Dict[str, str], verify_crc: bool):
+    """(mapInArrow parse fn, output schema) over (path, content) rows
+    — shared by the batch scan and the streaming landing-dir tail so
+    the decode contract cannot drift between them."""
+    from .arrow_interchange import _iter_rows
+
+    spec, schema = _output_schema(features)
 
     def parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
+        for rb in batches:
             rows = []
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                data = _maybe_decompress(bytes(blob))
+            for row in _iter_rows([rb]):
+                fpath = row["path"]
+                data = _maybe_decompress(row["content"])
                 rows.extend(_rows_from_payloads(
-                    _iter_records(data, str(fpath), verify=verify_crc),
-                    spec, str(fpath)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_fields])
+                    _iter_records(data, fpath, verify=verify_crc),
+                    spec, fpath))
+            yield _row_batch(rows, schema)
 
     return parse, schema
 
@@ -712,7 +728,7 @@ def stream_tfrecord(spark: SparkSession, path: str,
     return stream_binary_files(
         spark, path, glob,
         max_files_per_trigger=max_files_per_trigger
-    ).mapInPandas(parse, schema)
+    ).mapInArrow(parse, schema)
 
 
 def read_tfrecord_split(spark: SparkSession, path: str,
@@ -750,9 +766,7 @@ def read_tfrecord_split(spark: SparkSession, path: str,
     if split_mb < 1:
         raise ValueError("split_mb must be >= 1")
     backend = resolve_split_backend(path, backend)
-    bad = {k: v for k, v in features.items() if v not in FEATURE_KINDS}
-    if bad:
-        raise ValueError(f"unknown feature kinds: {bad}")
+    spec, schema = _output_schema(features)
     files = list_split_files(path, glob_pat, backend)
     if not files:
         raise ValueError(f"no files match {glob_pat!r} under {path}")
@@ -773,12 +787,6 @@ def read_tfrecord_split(spark: SparkSession, path: str,
                 f"{p}: compressed TFRecord shards are single streams "
                 "and cannot split — use read_tfrecord")
 
-    out_fields = [T.StructField("_file", T.StringType())] + [
-        T.StructField(n, _SPARK_TYPES[k])
-        for n, k in sorted(features.items())]
-    schema = T.StructType(out_fields)
-    spec = sorted(features.items())
-
     step = split_mb << 20
     ranges = []
     for p in files:
@@ -795,23 +803,20 @@ def read_tfrecord_split(spark: SparkSession, path: str,
     ).repartition(min(len(ranges), 4096))
 
     def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
+        for rb in batches:
             rows = []
-            for row in pdf.itertuples(index=False):
+            for row in rb.to_pylist():
                 span, base = _read_split_span(
-                    row.path, int(row.start), int(row.end),
-                    int(row.size), backend=backend)
+                    row["path"], row["start"], row["end"], row["size"],
+                    backend=backend)
                 if span:
                     rows.extend(_rows_from_payloads(
-                        _iter_records(span, row.path,
+                        _iter_records(span, row["path"],
                                       verify=verify_crc),
-                        spec, row.path))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_fields])
+                        spec, row["path"]))
+            yield _row_batch(rows, schema)
 
-    return rdf.mapInPandas(decode, schema)
+    return rdf.mapInArrow(decode, schema)
 
 
 def _header_ok(buf: bytes, off: int, limit: int) -> Optional[int]:
@@ -951,11 +956,10 @@ def write_tfrecord(df: DataFrame, features: Dict[str, str], out_dir: str,
     the same on-disk shape as TF's ``TFRecordOptions(
     compression_type='GZIP')``; ``'zlib'`` mirrors the ZLIB option
     (plain ``.tfrecord`` name, the reader sniffs the stream header).
-    A NULL cell (None, or NaN in a
-    nullable numeric column — Arrow→pandas renders nullable int64 as
-    float64-with-NaN) is written as an ABSENT feature, mirroring the
-    read path, which maps absent features back to NULL."""
-    import os
+    A NULL cell is written as an ABSENT feature, mirroring the read
+    path, which maps absent features back to NULL. Each shard reaches
+    the encoder as Arrow (``applyInArrow``), so int64 values are exact
+    and a float NaN is written as NaN, not dropped as a NULL."""
 
     bad = {k: v for k, v in features.items() if v not in FEATURE_KINDS}
     if bad:
@@ -965,44 +969,28 @@ def write_tfrecord(df: DataFrame, features: Dict[str, str], out_dir: str,
     if compression not in (None, "gzip", "zlib"):
         raise ValueError(f"unsupported compression {compression!r} "
                          "(None, 'gzip' or 'zlib')")
+    from .arrow_interchange import _write_shards
+
     key = order_by or sorted(features)[0]
     spec = sorted(features.items())
     os.makedirs(out_dir, exist_ok=True)
-
-    sel = df.select(*[c for c, _ in spec]).withColumn(
-        "_shard", F.pmod(F.xxhash64(F.col(key).cast("string")),
-                         F.lit(shards)).cast("int"))
-
     ext = ".tfrecord.gz" if compression == "gzip" else ".tfrecord"
 
-    def write_shard(pdf):
+    def write_one(shard, tbl):
         import gzip
 
-        import pandas as pd
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"name": [], "n_records": []})
-        shard = int(pdf["_shard"].iloc[0])
-        pdf = pdf.sort_values(key, kind="mergesort")
         name = f"{prefix}-{shard:05d}-of-{shards:05d}{ext}"
         tmp = os.path.join(out_dir, f".{name}.tmp")
-        # column arrays instead of iterrows (measured 2× on the shard
-        # loop), batch framing instead of per-record CRC (another ~35%)
-        cols = {c: pdf[c].to_numpy() for c, _ in spec}
+        # column lists instead of per-row access (measured 2× on the
+        # shard loop), batch framing instead of per-record CRC (another
+        # ~35%); to_pylist keeps int64 exact and NaN distinct from null
+        cols = {c: tbl.column(c).to_pylist() for c, _ in spec}
         payloads = []
-        for i in range(len(pdf)):
+        for i in range(tbl.num_rows):
             feats = {}
             for col, kind in spec:
                 v = cols[col][i]
-                # None OR scalar NaN is a NULL cell -> absent feature
-                # (Arrow->pandas renders nullable int64/float64 nulls
-                # as NaN; int(NaN) would crash, float NaN would be
-                # silently written — both asymmetric with the read
-                # path's absent-feature -> NULL mapping)
-                if v is None or (
-                        not isinstance(v, (list, tuple))
-                        and not hasattr(v, "__len__")
-                        and pd.isna(v)):
+                if v is None:  # NULL cell -> absent feature
                     continue
                 if kind in ("bytes", "bytes_list"):
                     # a string cell under a bytes kind is utf-8 encoded
@@ -1020,7 +1008,6 @@ def write_tfrecord(df: DataFrame, features: Dict[str, str], out_dir: str,
                             else [float(x) for x in v])
                 feats[col] = (kind, conv)
             payloads.append(encode_example(feats))
-        n = len(payloads)
         framed = _frame_records(payloads)
         with open(tmp, "wb") as raw:
             if compression == "gzip":
@@ -1036,8 +1023,7 @@ def write_tfrecord(df: DataFrame, features: Dict[str, str], out_dir: str,
             else:
                 raw.write(framed)
         os.replace(tmp, os.path.join(out_dir, name))
-        return pd.DataFrame({"name": [name], "n_records": [n]})
+        return name
 
-    manifest = (sel.groupBy("_shard").applyInPandas(
-        write_shard, "name string, n_records long").collect())
-    return sorted(r["name"] for r in manifest)
+    return _write_shards(df.select(*[c for c, _ in spec]), key, shards,
+                         write_one)

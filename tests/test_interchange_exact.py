@@ -1,8 +1,9 @@
-"""Exactness at the Avro and Arrow IPC boundaries: values that a
-pandas crossing would change — nullable longs above 2^53 and
-timestamps under a non-UTC session time zone — must reach the files
-and come back unchanged."""
+"""Exactness at the Avro, Arrow IPC and TFRecord boundaries: values
+that a pandas crossing would change — nullable longs above 2^53, NaN
+floats and timestamps under a non-UTC session time zone — must reach
+the files and come back unchanged."""
 
+import math
 import os
 
 from pyspark.sql import functions as F
@@ -12,6 +13,10 @@ from dataingestion_spark.sources.arrow_ipc import (
 )
 from dataingestion_spark.sources.avro import (
     read_avro, read_avro_split, read_container, write_avro,
+)
+from dataingestion_spark.sources.tfrecord import (
+    _iter_records, decode_example, read_tfrecord, read_tfrecord_split,
+    write_tfrecord,
 )
 
 _TZ = "spark.sql.session.timeZone"
@@ -31,6 +36,49 @@ def test_nullable_longs_above_2_53_roundtrip(spark, tmp_path):
     write_arrow_ipc(df, ipc, shards=2, order_by="k")
     for back in (read_avro(spark, av), read_arrow_ipc(spark, ipc)):
         assert {r["k"]: r["big"] for r in back.collect()} == want
+
+
+def test_tfrecord_nullable_longs_and_nan_roundtrip(spark, tmp_path):
+    """Through write_tfrecord and both TFRecord readers, 2^60 + k stays
+    exact with a null every 5th row, and a float NaN stays NaN —
+    stored in the file as a NaN feature, distinct from the absent
+    feature a null becomes."""
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 5 != 0,
+               F.lit(2 ** 60) + F.col("id")).alias("big"),
+        F.when(F.col("id") % 3 == 0, F.lit(float("nan")))
+         .when(F.col("id") % 3 == 1, F.col("id") * 0.5)
+         .cast("float").alias("f"))
+    features = {"k": "int64", "big": "int64", "f": "float"}
+    out = str(tmp_path / "tfr")
+    write_tfrecord(df, features, out, shards=2)
+
+    stored = {}
+    for name in os.listdir(out):
+        with open(os.path.join(out, name), "rb") as fh:
+            data = fh.read()
+        for payload in _iter_records(data, name):
+            ex = decode_example(payload)
+            stored[ex["k"][1][0]] = ex
+    assert len(stored) == 200
+    for k, ex in stored.items():
+        assert ex.get("big") == (
+            None if k % 5 == 0 else ("int64_list", [2 ** 60 + k]))
+        if k % 3 == 0:
+            assert math.isnan(ex["f"][1][0])
+        assert ("f" in ex) == (k % 3 != 2)
+
+    for back in (read_tfrecord(spark, out, features),
+                 read_tfrecord_split(spark, out, features, split_mb=1)):
+        got = {r["k"]: r for r in back.collect()}
+        assert {k: r["big"] for k, r in got.items()} == {
+            k: None if k % 5 == 0 else 2 ** 60 + k for k in range(200)}
+        for k, r in got.items():
+            if k % 3 == 0:
+                assert math.isnan(r["f"]), k
+            else:
+                assert r["f"] == (k * 0.5 if k % 3 == 1 else None), k
 
 
 def test_timestamps_keep_instants_under_non_utc_session(spark, tmp_path):

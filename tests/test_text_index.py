@@ -70,7 +70,9 @@ def test_term_selection_prunes_partitions(spark, tmp_path):
     buckets = {zlib.crc32(t.encode()) % 64 for t in text.split()}
     on_disk = [d for d in os.listdir(os.path.join(path, "postings"))
                if d.startswith("tb=")]
-    for filters, _, n_read in executed_scans(out, "postings"):
+    scans = executed_scans(out, "postings")
+    assert len(scans) == 1  # df and scores come from the same rows
+    for filters, _, n_read in scans:
         assert partition_literals(filters, "tb") == buckets, filters
         assert n_read == len(buckets) < len(on_disk)
 
@@ -122,6 +124,30 @@ def test_hybrid_indexed_equals_from_scratch(spark, tmp_path):
     want = rrf_fuse(bm, cos, k=5)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
+
+
+def test_serve_plans_read_query_inputs_from_local_relations(spark, tmp_path):
+    """Query frames built from driver lists enter every persisted-index
+    serve plan as driver-local rows: each leaf of the optimized plan is
+    a parquet scan of the index or a LocalRelation, never an RDD that
+    a scan would rerun through Python workers."""
+    from dataingestion_spark.sinks.text_index import hybrid_search_indexed
+    from dataingestion_spark.sinks.vector_index import search_ivf_index
+
+    _, tpath, vpath, vq, n_cents = _hybrid_indexes(spark, tmp_path)
+    tq = _queries(spark)
+    for df in (search_ivf_index(spark, vpath, vq, k=3, n_probe=1),
+               search_text_index(spark, tpath, tq, k=3),
+               hybrid_search_indexed(spark, tpath, vpath, tq, vq, k=5,
+                                     per_side_k=4, n_probe=n_cents)):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRelation":
+                kind += ":" + leaf.relation().fileFormat().toString()
+            assert kind in ("LocalRelation", "LogicalRelation:Parquet"), \
+                leaf.toString()
 
 
 def test_hybrid_jobs_run_in_callers_job_group(spark, tmp_path):

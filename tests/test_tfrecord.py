@@ -312,10 +312,10 @@ def test_maybe_decompress_ambiguous_magic_falls_back():
 
 
 def test_write_null_and_nan_cells_become_absent_features(spark, tmp_path):
-    """Nullable numeric columns arrive in pandas as float64-with-NaN;
-    both None and NaN cells must be written as ABSENT features (the
-    read path maps absent back to NULL), not crash int(NaN) or write
-    a literal NaN float."""
+    """NULL cells of nullable numeric columns must be written as ABSENT
+    features (the read path maps absent back to NULL). A float NaN is
+    a value, not a NULL: it is written as NaN (pinned in
+    test_interchange_exact.py)."""
     from pyspark.sql import functions as F
 
     df = spark.range(0, 10).select(
