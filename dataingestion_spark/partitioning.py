@@ -36,10 +36,11 @@ enters through ``local_frame``: its rows sit in the plan as a JVM
 from __future__ import annotations
 
 import os
+from typing import List
 
 from pyspark.sql import DataFrame
 
-__all__ = ["fan_out"]
+__all__ = ["fan_out", "local_frame", "plan_nodes"]
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -66,12 +67,11 @@ def fan_out(df: DataFrame) -> DataFrame:
         slots = int(sc.defaultParallelism)
         if slots <= 1:
             return df
-        # executedPlan, not sparkPlan: exchanges are inserted by the
-        # EnsureRequirements preparation rule, which sparkPlan predates.
-        # Building the (non-final) adaptive plan is pure planning — no
-        # query stage materializes until an action runs.
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
+        # plan_nodes walks executedPlan, not sparkPlan: exchanges are
+        # inserted by the EnsureRequirements preparation rule, which
+        # sparkPlan predates. Building the (non-final) adaptive plan is
+        # pure planning — no query stage materializes until an action runs.
+        if any(n.endswith("ExchangeExec") for n in plan_nodes(df)):
             return df
         n = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover — session teardown races
@@ -79,6 +79,30 @@ def fan_out(df: DataFrame) -> DataFrame:
     if n >= slots:
         return df
     return df.repartition(slots)
+
+
+def plan_nodes(df: DataFrame) -> List[str]:
+    """Class names of the nodes of ``df``'s physical plan, subqueries
+    included, with the adaptive wrapper and query stages unwrapped
+    (e.g. ``["ProjectExec", "ShuffleExchangeExec", ...]``). Built by
+    planning only: no stage runs. A plan decision reads these names,
+    never ``explain`` text, where a column or a path can spell any
+    node's name."""
+    out = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        out.append(name)
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out
 
 
 def local_frame(spark, data, schema) -> DataFrame:

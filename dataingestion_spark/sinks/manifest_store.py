@@ -48,6 +48,7 @@ from typing import Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..partitioning import local_frame
 from .commit_backend import backend_for
 from .vector_store import N_BUCKETS  # single source for the layout constant
 
@@ -1096,7 +1097,13 @@ def incremental_replace(records: DataFrame, table: str, mode: str = "rewrite",
     ``txn=(app_id, epoch)`` makes the commit idempotent under retries: a
     replace whose epoch is <= the app's last committed epoch is a no-op
     returning the current version — exactly-once table contents for a
-    foreachBatch sink that re-runs failed micro-batches."""
+    foreachBatch sink that re-runs failed micro-batches.
+
+    In rewrite mode the batch is evaluated ONCE: it is persisted for the
+    commit, so the constraint check, the one collect of its
+    (documentid, bucket) pairs and the bucket write all read the same
+    rows, and the upstream chain (parse, chunk, enrich, embed) runs
+    once per commit. The cache is released on every exit."""
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
     spark = records.sparkSession
@@ -1109,40 +1116,47 @@ def incremental_replace(records: DataFrame, table: str, mode: str = "rewrite",
     manifest = read_manifest(table)
     if _txn_applied(manifest, txn):
         return manifest["version"]
-    meta = _manifest_meta(manifest)
-    _enforce_constraints(records, meta["constraints"])
-    _txn_record(meta, txn)
-    affected = sorted(
-        str(r[0]) for r in records.select("doc_bucket").distinct().collect()
-    )
-    incoming_docs = records.select("documentid").distinct()
-    have_old = any(manifest["buckets"].get(b) for b in affected)
-    if have_old:
-        survivors = (
-            _read_files(spark, table, manifest, bucket_subset=affected)
-            .join(F.broadcast(incoming_docs), "documentid", "left_anti")
-        )
-        merged = survivors.unionByName(records, allowMissingColumns=True)
-    else:
-        merged = records
+    # a cached frame keeps its lineage, so a lost block recomputes
+    records.persist()
+    try:
+        meta = _manifest_meta(manifest)
+        _enforce_constraints(records, meta["constraints"])
+        _txn_record(meta, txn)
+        # one collect gives both the affected buckets and the anti-join
+        # ids (doc_bucket is a function of documentid)
+        pairs = records.select("documentid", "doc_bucket").distinct().toArrow()
+        affected = sorted({str(b) for b in pairs.column("doc_bucket").to_pylist()})
+        have_old = any(manifest["buckets"].get(b) for b in affected)
+        if have_old:
+            incoming_docs = local_frame(spark, pairs.select(["documentid"]),
+                                        records.select("documentid").schema)
+            survivors = (
+                _read_files(spark, table, manifest, bucket_subset=affected)
+                .join(F.broadcast(incoming_docs), "documentid", "left_anti")
+            )
+            merged = survivors.unionByName(records, allowMissingColumns=True)
+        else:
+            merged = records
 
-    token = uuid.uuid4().hex[:8]
-    version = manifest["version"] + 1
-    _seed_schema(spark, table, manifest, meta)
-    _schema_union(meta, merged)
-    new_buckets = _write_bucket_files(merged, table, token, stats=meta["stats"],
-                                      bloom_cols=meta["bloom_cols"],
-                                      colmap=meta["colmap"])
-    buckets = {
-        b: names for b, names in manifest["buckets"].items() if b not in affected
-    }
-    buckets.update(new_buckets)
-    for names in new_buckets.values():
-        meta["seq"].update({n: version for n in names})
-    # the rewrite applied any pending deletes for these buckets
-    meta["deletes"] = {b: v for b, v in meta["deletes"].items() if b not in affected}
-    return _commit(table, version, buckets, expected_current=manifest["version"],
-                   extra=_prune_meta(meta, buckets), op="REPLACE")
+        token = uuid.uuid4().hex[:8]
+        version = manifest["version"] + 1
+        _seed_schema(spark, table, manifest, meta)
+        _schema_union(meta, merged)
+        new_buckets = _write_bucket_files(merged, table, token, stats=meta["stats"],
+                                          bloom_cols=meta["bloom_cols"],
+                                          colmap=meta["colmap"])
+        buckets = {
+            b: names for b, names in manifest["buckets"].items() if b not in affected
+        }
+        buckets.update(new_buckets)
+        for names in new_buckets.values():
+            meta["seq"].update({n: version for n in names})
+        # the rewrite applied any pending deletes for these buckets
+        meta["deletes"] = {b: v for b, v in meta["deletes"].items() if b not in affected}
+        return _commit(table, version, buckets, expected_current=manifest["version"],
+                       extra=_prune_meta(meta, buckets), op="REPLACE")
+    finally:
+        records.unpersist()
 
 
 def _replace_with_dv(records: DataFrame, table: str, txn=None) -> int:

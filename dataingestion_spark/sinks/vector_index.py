@@ -234,10 +234,14 @@ def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
     sidecar centroids (driver-sized), partition pruning down to the
     probed lists, then the broadcast probe×LUT equi-join — the probe
     step and ADC scorer of ``operators.pq.topk_ivf_pq(residual=False)``,
-    so the same centroids/codebooks give identical results."""
+    so the same centroids/codebooks give identical results. The user's
+    query frame is collected once; the probe and the LUTs read that
+    driver-local copy."""
     from ..operators.pq import _adc_lut_df, _adc_score_lists
 
     codebooks = load_ivfpq_codebooks(path)
+    queries = queries.select(query_id, query_vec)
+    queries = local_frame(spark, queries.toArrow(), queries.schema)
     probes, lists = _probed_lists(spark, path, queries, n_probe,
                                   query_id, query_vec, keep_vec=False)
     qluts = _adc_lut_df(queries, codebooks, query_id, query_vec)

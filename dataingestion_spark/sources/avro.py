@@ -339,24 +339,6 @@ def _avro_node_to_spark(node: Dict, path: str) -> Tuple[T.DataType, bool]:
 # ---------------------------------------------------------------------------
 # value encoders / decoders compiled per schema node
 
-def _is_null(v: Any) -> bool:
-    """None/NaN/NaT are null; containers and strings never are (an Arrow
-    nullable numeric column reaches pandas as float64-with-NaN — same
-    contract as the TFRecord writer's NaN-as-absent rule)."""
-    if v is None:
-        return True
-    if isinstance(v, (list, tuple, dict, bytes, bytearray, str)):
-        return False
-    try:
-        import pandas as pd
-        import numpy as np
-        if isinstance(v, np.ndarray):
-            return False
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
-
-
 def _compile_encoder(node: Dict, path: str) -> Callable[[bytearray, Any], None]:
     kind = node["kind"]
     if kind == "union":
@@ -370,8 +352,9 @@ def _compile_encoder(node: Dict, path: str) -> Callable[[bytearray, Any], None]:
         vi, vb = others[0]
         enc_v = _compile_encoder(vb, path)
 
+        # None is the only null: NaN is a float value
         def enc_union(out, v, _ni=null_idx, _vi=vi, _enc=enc_v):
-            if _is_null(v):
+            if v is None:
                 _enc_long(out, _ni)
             else:
                 _enc_long(out, _vi)
@@ -446,10 +429,11 @@ def _compile_encoder(node: Dict, path: str) -> Callable[[bytearray, Any], None]:
     if kind == "map":
         enc_val = _compile_encoder(node["values"], path + "{}")
 
+        # a dict, or Arrow's Python form of a map: (key, value) pairs
         def enc_map(out, v, _enc=enc_val):
             if v:
                 _enc_long(out, len(v))
-                for k, item in v.items():
+                for k, item in (v.items() if isinstance(v, dict) else v):
                     kb = k.encode("utf-8")
                     _enc_long(out, len(kb))
                     out.extend(kb)
@@ -948,11 +932,12 @@ def write_container_frame(path: str, schema_js: Any, pdf,
                           block_rows: int = 1024,
                           extra_meta: Optional[Dict[str, str]] = None
                           ) -> bool:
-    """Columnar twin of :func:`write_container`: encode a pandas frame
-    through the vectorized flat-record encoder
-    (`sources/avro_vec_enc.py`) — BYTE-IDENTICAL output — and return
-    True; returns False (writing nothing) when the schema is out of
-    the vectorized plan so the caller can fall back."""
+    """Columnar twin of :func:`write_container`: encode an Arrow table
+    (nulls from its validity bitmaps) or a pandas frame (None/NaN/NaT
+    are null in a nullable field) through the vectorized flat-record
+    encoder (`sources/avro_vec_enc.py`) — BYTE-IDENTICAL output — and
+    return True; returns False (writing nothing) when the schema is out
+    of the vectorized plan so the caller can fall back."""
     from .avro_vec_enc import encode_frame
 
     if codec not in _CODECS:
@@ -1384,6 +1369,36 @@ def _decode_payloads(datas: List[bytes], counts: List[int], name: str,
     return rows
 
 
+def _holds_float_list(t) -> bool:
+    import pyarrow as pa
+
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return (pa.types.is_floating(t.value_type)
+                or _holds_float_list(t.value_type))
+    if pa.types.is_struct(t):
+        return any(_holds_float_list(f.type) for f in t)
+    if pa.types.is_map(t):
+        return _holds_float_list(t.item_type)
+    return False
+
+
+def _scalar_rows(tbl) -> List[Dict]:
+    """An Arrow shard as row dicts for the scalar encoder, with None
+    exactly where Arrow holds a null. ``to_pandas`` (several times
+    faster than ``to_pylist``) keeps None and NaN apart in struct
+    children and map values, but folds a top-level null into NaN/NaT
+    and a null float list element into NaN: those columns are fixed
+    from the validity bitmap, or taken through ``to_pylist``."""
+    pdf = tbl.to_pandas(integer_object_nulls=True, maps_as_pydicts="strict")
+    for c, col in zip(tbl.column_names, tbl.columns):
+        if _holds_float_list(col.type):
+            pdf[c] = col.to_pylist()
+        elif col.null_count:
+            valid = col.is_valid().to_numpy(zero_copy_only=False)
+            pdf[c] = pdf[c].astype(object).where(valid, None)
+    return pdf.to_dict("records")
+
+
 def write_avro(df: DataFrame, out_dir: str, shards: int = 4,
                order_by: Optional[str] = None, prefix: str = "part",
                codec: str = "null", block_rows: int = 1024) -> List[str]:
@@ -1417,16 +1432,15 @@ def write_avro(df: DataFrame, out_dir: str, shards: int = 4,
         name = f"{prefix}-{shard:05d}-of-{shards:05d}.avro"
         sync = hashlib.sha256(name.encode()).digest()[:16]
         tmp = os.path.join(out_dir, f".{name}.tmp")
-        # object ints keep nullable longs exact (a float64 crossing
-        # rounds them above 2^53); timestamps stay tz-aware instants
-        pdf = tbl.to_pandas(integer_object_nulls=True,
-                            maps_as_pydicts="strict")
-        # vectorized columnar encoder first (byte-identical output,
-        # sources/avro_vec_enc.py); scalar per-row fallback otherwise
-        if not write_container_frame(tmp, schema_js, pdf, cols,
+        # both encoders take nullness from the Arrow shard's validity
+        # bitmaps (a NaN stays a NaN), longs stay exact above 2^53 and
+        # timestamps stay instants: vectorized columnar encoder first
+        # (byte-identical output, sources/avro_vec_enc.py), scalar
+        # per-row fallback otherwise
+        if not write_container_frame(tmp, schema_js, tbl, cols,
                                      codec=codec, sync=sync,
                                      block_rows=block_rows):
-            write_container(tmp, schema_js, pdf.to_dict("records"),
+            write_container(tmp, schema_js, _scalar_rows(tbl),
                             codec=codec, sync=sync,
                             block_rows=block_rows)
         os.replace(tmp, os.path.join(out_dir, name))

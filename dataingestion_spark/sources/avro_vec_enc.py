@@ -1,8 +1,9 @@
 """Vectorized Avro ENCODER for flat records (numpy, columnar input).
 
 The write-side twin of `sources/avro_vec.py`: `write_avro`'s shards
-arrive as pandas frames (columnar), so instead of converting to N row
-dicts and running the per-value python encoder, we compute every
+arrive as Arrow tables (columnar; a pandas frame converts to Arrow
+first), so instead of converting to N row dicts and running the
+per-value python encoder, we compute every
 value's encoded byte length vectorized, lay out the whole payload's
 offsets with cumsums, and SCATTER each field's bytes in ≤10 numpy
 waves (one per varint byte position) or one strided store
@@ -156,79 +157,48 @@ def _enc_plan(node: Dict) -> Optional[List[Dict]]:
 # ---------------------------------------------------------------------------
 # encode
 
-def _col_arrays(step: Dict, ser) -> Dict[str, Any]:
-    """Per-column preprocessing -> numeric arrays / payload bytes and
-    per-row encoded lengths (excluding the union tag). Vectorized:
-    pandas isna/fillna/str.encode + numpy casts, no per-row python in
-    the numeric paths (the first cut used list comprehensions and was
+def _col_arrays(step: Dict, arr) -> Dict[str, Any]:
+    """Per-column preprocessing of one Arrow array -> numeric arrays /
+    payload bytes and per-row encoded lengths (excluding the union
+    tag). Nullness is the array's validity bitmap, so a NaN is a value
+    and a null is a null. Vectorized: Arrow fill_null/casts + numpy, no
+    per-row python (the first cut used list comprehensions and was
     SLOWER than the scalar encoder — the conversions dominate)."""
-    import pandas as pd
+    import pyarrow as pa
 
     k = step["kind"]
-    n = len(ser)
+    n = len(arr)
     nullable = step["null_idx"] is not None
-    if nullable:
-        isnull = ser.isna().to_numpy(dtype=bool)
-    else:
-        isnull = np.zeros(n, bool)
+    isnull = arr.is_null().to_numpy(zero_copy_only=False)
 
-    # fillna on OBJECT series triggers pandas' silent-downcasting
-    # FutureWarning (and a future behavior change) — null slots are
-    # substituted per-dtype without it instead
     if k in ("long", "int"):
-        vals = ser.to_numpy()
-        if vals.dtype == object:
-            vals = np.array(
-                [0 if v is None or (isinstance(v, float) and v != v)
-                 else int(v) for v in vals],
-                dtype=np.int64)
-        else:
-            if nullable:
-                vals = np.where(isnull, 0, vals)
-            vals = vals.astype(np.int64)
-        u = _zigzag_u(vals)
+        vals = arr.fill_null(0).to_numpy(zero_copy_only=False)
+        u = _zigzag_u(vals.astype(np.int64))
         lens = _varint_len(u)
         lens[isnull] = 0
         return {"u": u, "lens": lens, "isnull": isnull}
     if k in ("double", "float"):
         w = 8 if k == "double" else 4
         dt = np.float64 if k == "double" else np.float32
-        vals = ser.to_numpy()
-        if vals.dtype == object:
-            vals = np.array(
-                [0.0 if v is None or (isinstance(v, float) and v != v)
-                 else v for v in vals],
-                dtype=dt)
-        else:
-            if nullable:
-                vals = np.where(isnull, 0.0, vals)
-            vals = vals.astype(dt)
+        vals = np.ascontiguousarray(
+            arr.fill_null(0.0).to_numpy(zero_copy_only=False), dtype=dt)
         lens = np.full(n, w, np.int64)
         lens[isnull] = 0
         return {"fixed": vals.view(np.uint8).reshape(n, w),
                 "lens": lens, "isnull": isnull}
     if k == "boolean":
-        vals = ser.to_numpy()
-        if vals.dtype == object:
-            vals = np.array(
-                [0 if v is None or (isinstance(v, float) and v != v)
-                 else int(bool(v)) for v in vals], dtype=np.uint8)
-        else:
-            if nullable:
-                vals = np.where(isnull, False, vals)
-            vals = vals.astype(np.uint8)
+        vals = arr.fill_null(False).to_numpy(zero_copy_only=False)
         lens = np.ones(n, np.int64)
         lens[isnull] = 0
-        return {"fixed": vals.reshape(n, 1), "lens": lens,
-                "isnull": isnull}
+        return {"fixed": vals.astype(np.uint8).reshape(n, 1),
+                "lens": lens, "isnull": isnull}
     if k in ("string", "bytes"):
-        # one Arrow C pass builds the UTF-8 values buffer AND the
-        # per-row byte offsets (pandas .str.encode is a per-element
-        # python lambda — measured ~1.3 s/M rows; this is ~30x less)
-        import pyarrow as pa
-
+        # the large (int64-offset) layout gives the UTF-8 values buffer
+        # AND the per-row byte offsets in one Arrow C pass (pandas
+        # .str.encode is a per-element python lambda — measured
+        # ~1.3 s/M rows; this is ~30x less)
         typ = pa.large_utf8() if k == "string" else pa.large_binary()
-        arr = pa.array(ser, type=typ, from_pandas=True)
+        arr = arr.cast(typ)
         if arr.null_count and not nullable:
             raise ValueError("null in a non-nullable column")
         offs = np.frombuffer(arr.buffers()[1], np.int64,
@@ -250,23 +220,15 @@ def _col_arrays(step: Dict, ser) -> Dict[str, Any]:
                 "lens": lens, "isnull": isnull}
     if k == "record_nullable":
         # nullable struct (r14): encode the PRESENT rows' children via
-        # one recursive encode_frame (drop_null keeps row order), then
-        # the generic scatter places each present row's span after its
-        # union tag; null rows contribute only the tag byte
-        import pandas as pd
-        import pyarrow as pa
-
+        # one recursive _encode_columns (drop_null keeps row order),
+        # then the generic scatter places each present row's span after
+        # its union tag; null rows contribute only the tag byte
         item_node = step["items"]
-        arr = pa.array(ser, type=_pa_type_for(item_node),
-                       from_pandas=True)
-        isnull = arr.is_null().to_numpy(zero_copy_only=False)
         present = arr.drop_null()
         ecols = [f["name"] for f in item_node["fields"]]
-        eframe = pd.DataFrame(
-            {f["name"]: _child_series(present.field(i), f["schema"])
-             for i, f in enumerate(item_node["fields"])},
-            columns=ecols)
-        res = encode_frame(item_node, eframe, ecols)
+        res = _encode_columns(
+            item_node, {c: present.field(i) for i, c in enumerate(ecols)},
+            ecols, len(present))
         if res is None:
             raise _StructOutOfScope  # child shape out of plan
         epayload = np.frombuffer(res[0], np.uint8)
@@ -282,27 +244,16 @@ def _col_arrays(step: Dict, ser) -> Dict[str, Any]:
         # element spans + zero terminators interleave into a local
         # payload the generic range scatter places — proxy-measured
         # 3.3-3.6x (see scripts/scale_probe_avro_struct_enc.py notes)
-        import pandas as pd
-        import pyarrow as pa
-
         item_node = step["items"]
-        arr = pa.array(ser, type=pa.large_list(_pa_type_for(item_node)),
-                       from_pandas=True)
         if arr.null_count and not nullable:
             raise ValueError("null in a non-nullable column")
-        offs = np.frombuffer(arr.buffers()[1], np.int64,
-                             count=len(arr) + 1 + arr.offset
-                             )[arr.offset:]
-        offs = offs - offs[0]
-        counts = np.diff(offs).copy()
+        offs, vals = _list_layout(arr)
+        counts = np.diff(offs)
         counts[isnull] = 0
-        vals = arr.values
         ecols = [f["name"] for f in item_node["fields"]]
-        eframe = pd.DataFrame(
-            {f["name"]: _child_series(vals.field(i), f["schema"])
-             for i, f in enumerate(item_node["fields"])},
-            columns=ecols)
-        res = encode_frame(item_node, eframe, ecols)
+        res = _encode_columns(
+            item_node, {c: vals.field(i) for i, c in enumerate(ecols)},
+            ecols, len(vals))
         if res is None:
             raise _StructOutOfScope  # element shape out of plan
         epayload = np.frombuffer(res[0], np.uint8)
@@ -324,24 +275,21 @@ def _col_arrays(step: Dict, ser) -> Dict[str, Any]:
         # the zero-initialized buffer
         return {"payload": local, "lens": lens, "isnull": isnull}
     if k == "array":
-        # arrow list conversion: one C pass -> child values buffer +
-        # per-row offsets (np.concatenate over millions of tiny cell
-        # arrays measured ~10x slower)
-        import pyarrow as pa
-
+        # the list layout: child values buffer + per-row offsets
+        # (np.concatenate over millions of tiny cell arrays measured
+        # ~10x slower)
         w = step["elem_w"]
         ctyp = {"double": pa.float64(), "float": pa.float32(),
                 "boolean": pa.bool_()}[step["elem"]]
-        arr = pa.array(ser, type=pa.large_list(ctyp), from_pandas=True)
         if arr.null_count and not nullable:
             raise ValueError("null in a non-nullable column")
-        offs = np.frombuffer(arr.buffers()[1], np.int64,
-                             count=len(arr) + 1 + arr.offset
-                             )[arr.offset:]
-        counts = np.diff(offs).copy()
+        offs, child = _list_layout(arr)
+        child = child.cast(ctyp)
+        counts = np.diff(offs)
         counts[isnull] = 0
-        child = arr.values
-        if step["elem"] == "boolean":
+        if not len(child):
+            vals = np.zeros(0, np.uint8)
+        elif step["elem"] == "boolean":
             # arrow packs bools to bits; avro wants one byte each
             vals = np.unpackbits(
                 np.frombuffer(child.buffers()[1], np.uint8),
@@ -352,8 +300,7 @@ def _col_arrays(step: Dict, ser) -> Dict[str, Any]:
             vals = np.frombuffer(child.buffers()[1], dt,
                                  count=child.offset + len(child)
                                  )[child.offset:]
-        payload = vals[int(offs[0]):int(offs[-1])].view(np.uint8) \
-            if len(vals) else np.zeros(0, np.uint8)
+        payload = vals.view(np.uint8)
         u = _zigzag_u(counts)
         vlens = _varint_len(u)
         blens = counts * w
@@ -398,20 +345,31 @@ def _pa_type_for(sch: Dict):
         raise _StructOutOfScope from None
 
 
-def _child_series(child, sch: Dict):
-    """pa child Array -> pandas Series safe for _col_arrays: integer
-    children WITH nulls come back as object ints (to_pandas' float64
-    would corrupt > 2^53 values); everything else converts directly."""
-    import pandas as pd
+def _list_layout(arr):
+    """(per-row offsets from 0 as int64, the child values those rows
+    span) of a list array, slicing offset applied."""
+    offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    vals = arr.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
+    return offs - offs[0], vals
 
-    vnode = sch
-    if vnode["kind"] == "union":
-        br = vnode["branches"]
-        vnode = br[1] if br[0]["kind"] == "null" else br[0]
-    if vnode["kind"] in ("long", "int") and child.null_count:
-        return pd.Series(
-            child.to_pandas(integer_object_nulls=True), dtype=object)
-    return pd.Series(child.to_pandas())
+
+def _arrow_columns(node: Dict, data, cols: List[str]):
+    """``data``'s ``cols`` as Arrow arrays, or None when a column's
+    shape is out of plan. An Arrow table is taken as is; a pandas frame
+    converts under pandas' null convention (None/NaN/NaT are null) in
+    a nullable field, and keeps NaN as a value in a non-nullable one."""
+    import pyarrow as pa
+
+    if isinstance(data, pa.Table):
+        return {c: data.column(c).combine_chunks() for c in cols}
+    out = {}
+    try:
+        for f, c in zip(node["fields"], cols):
+            out[c] = pa.array(data[c], type=_pa_type_for(f["schema"]),
+                              from_pandas=f["schema"]["kind"] == "union")
+    except _StructOutOfScope:
+        return None
+    return out
 
 
 def _explode_struct(sa, rec_node: Dict, prefix: str,
@@ -435,20 +393,16 @@ def _explode_struct(sa, rec_node: Dict, prefix: str,
             continue
         name = prefix + f["name"]
         out_fields.append({"name": name, "schema": sch})
-        out_cols[name] = _child_series(child, sch)
+        out_cols[name] = child
 
 
-def _flatten_struct_cols(node: Dict, pdf, cols: List[str]):
-    """(node', pdf', cols') with every NON-nullable record field
+def _flatten_struct_cols(node: Dict, columns: Dict, cols: List[str]):
+    """(node', columns', cols') with every NON-nullable record field
     inlined to its children (wire-identical — a record's bytes are its
-    fields in order), children extracted in one Arrow C pass per
-    struct column; None when there is nothing to flatten or a struct
+    fields in order); None when there is nothing to flatten or a struct
     shape is out of plan (caller goes scalar). r14 — the write-side
     twin of the decoder's struct flattening; proxy-measured ~3x
     (scripts/scale_probe_avro_struct_enc.py)."""
-    import pandas as pd
-    import pyarrow as pa
-
     if node["kind"] != "record" or not any(
             f["schema"].get("kind") == "record"
             for f in node["fields"]):
@@ -462,12 +416,11 @@ def _flatten_struct_cols(node: Dict, pdf, cols: List[str]):
             if sch["kind"] != "record":
                 new_fields.append(f)
                 new_cols.append(c)
-                data[c] = pdf[c]
+                data[c] = columns[c]
                 continue
             if not sch["fields"]:
                 raise _StructOutOfScope
-            sa = pa.array(pdf[c], type=_pa_type_for(sch),
-                          from_pandas=True)
+            sa = columns[c]
             if sa.null_count:
                 raise ValueError(
                     f"column {c!r}: null struct in a non-nullable "
@@ -479,30 +432,39 @@ def _flatten_struct_cols(node: Dict, pdf, cols: List[str]):
     except _StructOutOfScope:
         return None
     return ({"kind": "record", "name": node.get("name"),
-             "fields": new_fields},
-            pd.DataFrame(data, columns=new_cols), new_cols)
+             "fields": new_fields}, data, new_cols)
 
 
-def encode_frame(node: Dict, pdf, cols: List[str]) -> Optional[Tuple]:
-    """Encode ``pdf[cols]`` (pandas) under flat record ``node`` ->
-    (payload bytes, per-row end offsets) or None when out of plan.
-    Bytes are identical to the scalar per-row encoder. NON-nullable
-    struct columns flatten to their children first (r14, wire-
-    identical); nullable structs and other nested shapes decline."""
-    flat = _flatten_struct_cols(node, pdf, cols)
+def encode_frame(node: Dict, data, cols: List[str]) -> Optional[Tuple]:
+    """Encode ``data[cols]`` (an Arrow table, or a pandas frame) under
+    flat record ``node`` -> (payload bytes, per-row end offsets) or
+    None when out of plan. Bytes are identical to the scalar per-row
+    encoder. NON-nullable struct columns flatten to their children
+    first (r14, wire-identical); nullable structs and other nested
+    shapes decline."""
+    if node["kind"] != "record":
+        return None
+    columns = _arrow_columns(node, data, cols)
+    if columns is None:
+        return None
+    return _encode_columns(node, columns, cols, len(data))
+
+
+def _encode_columns(node: Dict, columns: Dict, cols: List[str], n: int
+                    ) -> Optional[Tuple]:
+    flat = _flatten_struct_cols(node, columns, cols)
     if flat is not None:
-        node, pdf, cols = flat
+        node, columns, cols = flat
     steps = _enc_plan(node)
     if steps is None:
         return None
-    n = len(pdf)
     if n == 0:
         return b"", np.zeros(0, np.int64)
     prepped = []
     row_len = np.zeros(n, np.int64)
     for step, cname in zip(steps, cols):
         try:
-            p = _col_arrays(step, pdf[cname])
+            p = _col_arrays(step, columns[cname])
         except _StructOutOfScope:
             return None  # element shape out of plan — caller scalar
         if step["null_idx"] is not None:

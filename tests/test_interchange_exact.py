@@ -134,3 +134,46 @@ def test_timestamps_keep_instants_under_non_utc_session(spark, tmp_path):
                 assert [r["v"] for r in got] == want, tz
     finally:
         spark.conf.set(_TZ, prev)
+
+
+def test_avro_nullable_double_keeps_nan_apart_from_null(spark, tmp_path):
+    """A nullable double holding both NaN and null: write_avro stores a
+    NaN as a NaN and a null as the union's null branch, through the
+    vectorized encoder (flat, and a struct child it flattens) and the
+    scalar fallback (a timestamp column sends the shard there; it also
+    carries the value as an element of a list), at 1024-row and 2-row
+    blocks."""
+    def x(c):
+        return (F.when(c % 3 == 0, F.lit(float("nan")))
+                .when(c % 3 == 1, c * 0.5))
+
+    base = spark.range(60).select(
+        F.col("id").alias("k"), x(F.col("id")).alias("x"),
+        F.struct(x(F.col("id") + 1).alias("y")).alias("s"))
+    frames = {"vectorized": base,
+              "scalar": base.withColumn("ts", F.timestamp_seconds("k"))
+                            .withColumn("a", F.array(x(F.col("k") + 2)))}
+
+    def same(got, k):
+        if k % 3 == 0:
+            return got is not None and math.isnan(got)
+        return got == (k * 0.5 if k % 3 == 1 else None)
+
+    for path_kind, df in frames.items():
+        for block_rows in (1024, 2):
+            out = str(tmp_path / f"{path_kind}{block_rows}")
+            write_avro(df, out, shards=2, order_by="k",
+                       block_rows=block_rows)
+            stored = []
+            for name in os.listdir(out):
+                with open(os.path.join(out, name), "rb") as fh:
+                    stored += read_container(fh.read(), name)[1]
+            back = read_avro(spark, out).collect()
+            for rows in (stored, back):
+                assert len(rows) == 60
+                for r in rows:
+                    k = r["k"]
+                    assert same(r["x"], k), (path_kind, block_rows, k, r["x"])
+                    assert same(r["s"]["y"], k + 1), (path_kind, k, r["s"])
+                    if path_kind == "scalar":
+                        assert same(r["a"][0], k + 2), (k, r["a"])

@@ -2066,3 +2066,78 @@ def test_append_rebase_still_raises_on_concurrent_drop(spark, tmp_path,
         F.lit("fr").alias("lang"))
     with pytest.raises(ms.ConcurrentWriteError, match="column mapping"):
         ms.append_table(evolving, t)
+
+
+# --- a rewrite-mode replace evaluates its batch once ---
+
+
+def _counted_batch(spark, docs: dict):
+    """``records_df`` whose documentid passes through a Python UDF that
+    counts every row it evaluates (every column of the batch needs the
+    documentid, so no consumer can prune the UDF away)."""
+    from pyspark.sql.types import StringType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(doc):
+        seen.add(1)
+        return doc
+
+    tagged = F.udf(tag, StringType())
+    df = records_df(spark, docs).withColumn("documentid", tagged("documentid"))
+    return df, seen
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_rewrite_replace_evaluates_batch_once(spark, tmp_path):
+    table = str(tmp_path / "once")
+    docs = {f"doc{i}": [f"doc{i}-c0", f"doc{i}-c1"] for i in range(20)}
+    ms.write_table(records_df(spark, docs), table)
+    ms.add_constraint(spark, table, "content_nonempty", "length(content) > 0")
+    before = _persistent_rdds(spark)
+
+    new = {"doc3": ["n0", "n1", "n2"], "doc11": ["n3"], "fresh": ["n4"]}
+    batch, seen = _counted_batch(spark, new)
+    v = ms.incremental_replace(batch, table, mode="rewrite")
+
+    assert seen.value == 5  # the constraint, the ids and the write share one pass
+    assert _persistent_rdds(spark) == before
+    got = ms.read_table(spark, table, version=v)
+    by_doc = {r.documentid: r.n for r in
+              got.groupBy("documentid").agg(F.count("*").alias("n")).collect()}
+    assert by_doc["doc3"] == 3 and by_doc["doc11"] == 1 and by_doc["fresh"] == 1
+    assert by_doc["doc4"] == 2 and len(by_doc) == 21
+
+
+def test_rewrite_replace_releases_batch_on_failure(spark, tmp_path):
+    table = str(tmp_path / "fail")
+    ms.write_table(records_df(spark, {"a": ["a0"], "b": ["b0"]}), table)
+    ms.add_constraint(spark, table, "content_nonempty", "length(content) > 0")
+    before = _persistent_rdds(spark)
+
+    bad, _ = _counted_batch(spark, {"c": [""]})
+    with pytest.raises(ms.ConstraintViolation):
+        ms.incremental_replace(bad, table, mode="rewrite")
+    assert _persistent_rdds(spark) == before
+
+    real_write = ms._write_bucket_files
+    raced = []
+
+    def write_then_race(*args, **kwargs):
+        # a racing writer commits between our write and our commit
+        out = real_write(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            ms.append_table(records_df(spark, {"racer": ["r0"]}), table)
+        return out
+
+    good, _ = _counted_batch(spark, {"a": ["a1"]})
+    import unittest.mock
+
+    with unittest.mock.patch.object(ms, "_write_bucket_files", write_then_race):
+        with pytest.raises(ms.ConcurrentWriteError):
+            ms.incremental_replace(good, table, mode="rewrite")
+    assert _persistent_rdds(spark) == before

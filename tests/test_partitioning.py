@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from dataingestion_spark.partitioning import fan_out
+from dataingestion_spark.partitioning import fan_out, plan_nodes
 
 
 def test_fan_out_raises_parallelism(spark):
@@ -23,6 +23,20 @@ def test_fan_out_raises_parallelism(spark):
     assert fanned.rdd.getNumPartitions() == slots
     # row multiset unchanged
     assert sorted(r[0] for r in fanned.collect()) == list(range(1000))
+
+
+def test_fan_out_reads_plan_nodes_not_plan_text(spark):
+    # a column named Exchange spells the word in the plan text; the
+    # plan itself has no exchange, so the fan-out still fires
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.range(1000).withColumnRenamed("id", "Exchange").coalesce(1)
+    assert "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+    assert not any(n.endswith("ExchangeExec") for n in plan_nodes(df))
+    assert fan_out(df).rdd.getNumPartitions() == slots
+    grouped = (spark.range(1000).withColumnRenamed("id", "Exchange")
+               .groupBy((F.col("Exchange") % 7).alias("k")).count())
+    assert "ShuffleExchangeExec" in plan_nodes(grouped)
+    assert fan_out(grouped) is grouped
 
 
 def test_fan_out_noop_when_already_parallel(spark):

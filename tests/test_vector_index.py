@@ -155,11 +155,21 @@ def test_ivfpq_search_equals_in_memory(spark, tmp_path):
     qs = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    got = search_ivfpq_index(spark, path, qs, k=10, n_probe=2)
+    # the query ids pass through a Python UDF that counts every row it
+    # evaluates: the probe and the LUTs must share one read of the frame
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(qid):
+        seen.add(1)
+        return qid
+
+    counted = qs.withColumn("query_id", F.udf(tag, "long")("query_id"))
+    got = search_ivfpq_index(spark, path, counted, k=10, n_probe=2).collect()
+    assert seen.value == 5
     want = topk_ivf_pq(e, qs, k=10, n_centroids=8, n_probe=2, m=4,
                        k_codes=16, centroids=cents, codebooks=books)
     assert ({(r.query_id, r.rank, r.vec_id, round(r.score, 9))
-             for r in got.collect()}
+             for r in got}
             == {(r.query_id, r.rank, r.vec_id, round(r.score, 9))
                 for r in want.collect()})
 
