@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark starts every Python worker from this module (see worker_daemon.py).
+WORKER_DAEMON_MODULE = "dataingestion_spark.worker_daemon"
+
 
 def get_spark(app_name: str = "dataingestion_spark", cpus: str | int | None = None,
               shuffle_partitions: int | None = None, driver_mem: str | None = None,
@@ -16,6 +19,11 @@ def get_spark(app_name: str = "dataingestion_spark", cpus: str | int | None = No
     to ~2-3× total executor cores; everything else carries over. UTC session
     time zone is required for engine-independent timestamp semantics, and
     nanosAsLong lets Spark read TIMESTAMP(NANOS) parquet.
+
+    Python workers fork from ``WORKER_DAEMON_MODULE``, so executors must be
+    able to import ``dataingestion_spark``, as they already must for the
+    package's UDFs, and before any task runs: install it in the executors'
+    Python rather than ship it with ``addPyFile``.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "*"))
     builder = (
@@ -54,6 +62,7 @@ def get_spark(app_name: str = "dataingestion_spark", cpus: str | int | None = No
         .config("spark.driver.memory",
                 driver_mem or os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

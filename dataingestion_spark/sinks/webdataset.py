@@ -4,7 +4,7 @@ Training loaders (WebDataset, torchdata, NeMo) stream samples from tar
 shards: members grouped by a basename key, extension = field
 (``000123.txt``, ``000123.json``, …), shards sized for sequential
 reads. This sink turns a DataFrame into those shards with Spark doing
-the heavy lifting: one ``applyInPandas`` group per shard (the shard is
+the heavy lifting: one ``applyInArrow`` group per shard (the shard is
 the parallel unit — 100 TB is just more shards), members sorted by key
 inside each shard, and a manifest row per shard back to the planner.
 
@@ -87,20 +87,27 @@ def write_webdataset(
     is set, already-serialized JSON strings). Rows are sorted by key
     within the shard. ``out_dir=None`` builds every archive in memory
     and returns the manifest without writing — the dry-run/audit path.
+
+    A member holds ``str()`` of its cell: the shard crosses as Arrow,
+    so a long above 2^53 is written exactly and a float NaN as ``nan``.
+    A null cell writes no member, the way a WebDataset sample lacks a
+    field.
     """
-    cols = [shard_col, key_col, text_col] + ([meta_col] if meta_col else [])
+    fields = [text_col] + ([meta_col] if meta_col else [])
+    cols = [shard_col, key_col] + fields
 
-    def export(pdf):
-        import pandas as pd
+    def export(tbl):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        pdf = pdf.sort_values(key_col)
-        shard_id = int(pdf[shard_col].iloc[0])
+        rows = tbl.sort_by(key_col).to_pylist()
+        shard_id = int(rows[0][shard_col])
         members: List[Tuple[str, bytes]] = []
-        for _, row in pdf.iterrows():
+        for row in rows:
             key = str(row[key_col])
-            members.append((f"{key}.txt", str(row[text_col]).encode()))
-            if meta_col:
-                members.append((f"{key}.json", str(row[meta_col]).encode()))
+            for col, ext in zip(fields, ("txt", "json")):
+                if row[col] is not None:
+                    members.append((f"{key}.{ext}", str(row[col]).encode()))
         data = build_tar_bytes(members)
         assert len(data) == tar_size_closed_form([len(d) for _, d in members])
         if out_dir is not None:
@@ -109,50 +116,48 @@ def write_webdataset(
             with open(tmp, "wb") as fh:
                 fh.write(data)
             os.replace(tmp, os.path.join(out_dir, f"shard-{shard_id:05d}.tar"))
-        return pd.DataFrame(
-            [
-                (
-                    shard_id,
-                    len(members),
-                    len(data),
-                    str(pdf[key_col].iloc[0]),
-                    str(pdf[key_col].iloc[-1]),
-                )
-            ],
-            columns=[f.name for f in MANIFEST_SCHEMA.fields],
-        )
+        return pa.Table.from_pylist(
+            [{"shard_id": shard_id, "n_members": len(members),
+              "tar_nbytes": len(data), "first_key": str(rows[0][key_col]),
+              "last_key": str(rows[-1][key_col])}],
+            schema=to_arrow_schema(MANIFEST_SCHEMA))
 
     return (
-        df.select(*cols).groupBy(shard_col).applyInPandas(export, MANIFEST_SCHEMA)
+        df.select(*cols).groupBy(shard_col).applyInArrow(export, MANIFEST_SCHEMA)
     )
+
+
+MEMBER_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in ("path", "key", "ext", "payload")]
+)
+
+
+def _member_batch(rows: List[Tuple[str, str, str, str]]):
+    """(path, key, ext, payload) tuples as one RecordBatch of
+    :data:`MEMBER_SCHEMA` (executor side)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(MEMBER_SCHEMA.fields)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, pa.string()) for c in cols], names=MEMBER_SCHEMA.names)
 
 
 def _tar_member_parser():
-    """(mapInPandas parse fn, output schema) over (path, content) rows
-    — shared by the batch scan and the streaming landing-dir tail."""
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("key", StringType()),
-            StructField("ext", StringType()),
-            StructField("payload", StringType()),
-        ]
-    )
+    """mapInArrow parse fn over (path, content) rows — shared by the
+    batch scan and the streaming landing-dir tail."""
+    from ..sources.arrow_interchange import _iter_rows
 
     def run(batches) -> Iterator:
-        import pandas as pd
+        for row in _iter_rows(batches):
+            p, rows = row["path"], []
+            with tarfile.open(fileobj=io.BytesIO(row["content"])) as tf:
+                for info in tf.getmembers():
+                    base, _, ext = info.name.rpartition(".")
+                    payload = tf.extractfile(info).read().decode("utf-8", "replace")
+                    rows.append((p, base, ext, payload))
+            yield _member_batch(rows)
 
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tf:
-                    for info in tf.getmembers():
-                        base, _, ext = info.name.rpartition(".")
-                        payload = tf.extractfile(info).read().decode("utf-8", "replace")
-                        rows.append((p, base, ext, payload))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return run, schema
+    return run
 
 
 def read_webdataset(spark, path: str) -> DataFrame:
@@ -161,8 +166,8 @@ def read_webdataset(spark, path: str) -> DataFrame:
     task."""
     from ..sources.markdown import binary_file_scan
 
-    run, schema = _tar_member_parser()
-    return binary_file_scan(spark, path, glob="*.tar").mapInPandas(run, schema)
+    return binary_file_scan(spark, path, glob="*.tar").mapInArrow(
+        _tar_member_parser(), MEMBER_SCHEMA)
 
 
 def stream_webdataset(spark, path: str, glob: str = "*.tar",
@@ -174,11 +179,10 @@ def stream_webdataset(spark, path: str, glob: str = "*.tar",
     contract cannot drift. ``max_files_per_trigger`` paces catch-up."""
     from ..sources.markdown import stream_binary_files
 
-    run, schema = _tar_member_parser()
     return stream_binary_files(
         spark, path, glob,
         max_files_per_trigger=max_files_per_trigger
-    ).mapInPandas(run, schema)
+    ).mapInArrow(_tar_member_parser(), MEMBER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -530,28 +534,17 @@ def read_webdataset_split(spark, path: str, *, split_mb: int = 128,
         ranges, "path string, start long, end long, size long"
     ).repartition(min(len(ranges), 4096))
 
-    schema = StructType([
-        StructField("path", StringType()),
-        StructField("key", StringType()),
-        StructField("ext", StringType()),
-        StructField("payload", StringType()),
-    ])
+    from ..sources.arrow_interchange import _iter_rows
 
     def run(batches) -> Iterator:
-        import pandas as pd
+        for row in _iter_rows(batches):
+            p, rows = row["path"], []
+            gl, ds = gmap.get(p, ({}, 0))
+            for name, data in _read_tar_span(
+                    p, row["start"], row["end"], row["size"],
+                    backend=backend, globals_=gl, data_start=ds):
+                base, _, ext = name.rpartition(".")
+                rows.append((p, base, ext, data.decode("utf-8", "replace")))
+            yield _member_batch(rows)
 
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                gl, ds = gmap.get(row.path, ({}, 0))
-                for name, data in _read_tar_span(
-                        row.path, int(row.start), int(row.end),
-                        int(row.size), backend=backend,
-                        globals_=gl, data_start=ds):
-                    base, _, ext = name.rpartition(".")
-                    rows.append((row.path, base, ext,
-                                 data.decode("utf-8", "replace")))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields])
-
-    return rdf.mapInPandas(run, schema)
+    return rdf.mapInArrow(run, MEMBER_SCHEMA)

@@ -13,10 +13,12 @@ Two rules make this exact:
 - **Timestamps are instants**: Spark's ``TimestampType`` is
   ``timestamp[us, tz=UTC]`` on the Arrow side, and the JVM reads the
   raw microseconds since the epoch whatever the session time zone.
-  Readers cast decoded timestamps to that type (a metadata change);
-  writers receive the same raw instants. A pandas crossing would
-  instead localize them to the session time zone and turn nullable
-  longs into float64, which is why neither side has one.
+  Readers cast decoded timestamps to that type (a metadata change;
+  a foreign file's nanoseconds are first floored to the microsecond,
+  as Spark's JVM and its non-Arrow pandas conversion do, so every
+  cast stays safe); writers receive the same raw instants. A pandas
+  crossing would instead localize them to the session time zone and
+  turn nullable longs into float64, which is why neither side has one.
 """
 from __future__ import annotations
 
@@ -27,6 +29,7 @@ def arrow_batch_builder(spark_schema, want):
     """(target type map, arrays→RecordBatch fn). Executor-side only
     (imports pyarrow lazily)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
     def _nullable(t):
@@ -47,6 +50,8 @@ def arrow_batch_builder(spark_schema, want):
             if isinstance(arr, pa.ChunkedArray):
                 arr = arr.combine_chunks()
             if arr.type != target[c]:
+                if pa.types.is_timestamp(arr.type) and arr.type.unit == "ns":
+                    arr = pc.floor_temporal(arr, unit="microsecond")
                 arr = arr.cast(target[c])
             out.append(arr)
         return pa.RecordBatch.from_arrays(out, names=want)

@@ -96,6 +96,7 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from dataingestion_spark.session import WORKER_DAEMON_MODULE
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
@@ -103,6 +104,7 @@ def main():
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

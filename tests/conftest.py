@@ -7,6 +7,8 @@ import pytest
 def spark():
     from pyspark.sql import SparkSession
 
+    from dataingestion_spark.session import WORKER_DAEMON_MODULE
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     s = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -17,6 +19,7 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "4g"))
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

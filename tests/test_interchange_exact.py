@@ -1,13 +1,16 @@
-"""Exactness at the Avro, Arrow IPC and TFRecord boundaries: values
-that a pandas crossing would change — nullable longs above 2^53, NaN
-floats and timestamps under a non-UTC session time zone — must reach
-the files and come back unchanged."""
+"""Exactness at the Avro, Arrow IPC, TFRecord and WebDataset boundaries:
+values that a pandas crossing would change — nullable longs above 2^53,
+NaN floats and timestamps under a non-UTC session time zone — must
+reach the files and come back unchanged."""
 
 import math
 import os
 
 from pyspark.sql import functions as F
 
+from dataingestion_spark.sinks.webdataset import (
+    read_webdataset, read_webdataset_split, write_webdataset,
+)
 from dataingestion_spark.sources.arrow_ipc import (
     read_arrow_ipc, read_arrow_ipc_split, write_arrow_ipc,
 )
@@ -79,6 +82,55 @@ def test_tfrecord_nullable_longs_and_nan_roundtrip(spark, tmp_path):
                 assert math.isnan(r["f"]), k
             else:
                 assert r["f"] == (k * 0.5 if k % 3 == 1 else None), k
+
+
+def test_webdataset_nullable_longs_and_nan_roundtrip(spark, tmp_path):
+    """Through write_webdataset and both WebDataset readers, the ``.txt``
+    member of 2^60 + k holds its exact decimal with a null every 5th
+    row, and a NaN double in the ``.json`` member reads ``nan``, apart
+    from a null, which writes no member."""
+    df = spark.range(200).select(
+        (F.col("id") % 3).alias("shard_id"),
+        F.format_string("%04d", "id").alias("key"),
+        F.when(F.col("id") % 5 != 0,
+               F.lit(2 ** 60) + F.col("id")).alias("text"),
+        F.when(F.col("id") % 3 == 0, F.lit(float("nan")))
+         .when(F.col("id") % 3 == 1, F.col("id") * 0.5).alias("meta"))
+    want = {}
+    for k in range(200):
+        if k % 5:
+            want[(f"{k:04d}", "txt")] = str(2 ** 60 + k)
+        if k % 3 != 2:
+            want[(f"{k:04d}", "json")] = "nan" if k % 3 == 0 else str(k * 0.5)
+
+    out = str(tmp_path / "wds")
+    manifest = write_webdataset(df, out).collect()
+    assert sum(m["n_members"] for m in manifest) == len(want)
+    for back in (read_webdataset(spark, out),
+                 read_webdataset_split(spark, out, split_mb=1)):
+        got = {(r["key"], r["ext"]): r["payload"] for r in back.collect()}
+        assert got == want
+
+
+def test_arrow_ipc_floors_foreign_nanosecond_timestamps(spark, tmp_path):
+    """A pyarrow-written Feather file with ``timestamp[ns]`` values that
+    are not whole microseconds reads through both IPC readers, floored
+    to the microsecond like Spark's own conversions (a pre-1970 value
+    moves earlier, not toward zero)."""
+    import pyarrow as pa
+    import pyarrow.feather as feather
+
+    ns = [1600000001000003999, -1000003999, None]
+    d = tmp_path / "ipc"
+    d.mkdir()
+    feather.write_feather(
+        pa.table({"k": [0, 1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(d / "foreign.arrow"))
+    want = {0: 1600000001000003, 1: -1000004, 2: None}
+    for back in (read_arrow_ipc(spark, str(d)),
+                 read_arrow_ipc_split(spark, str(d), split_mb=1)):
+        got = back.select("k", F.unix_micros("ts").alias("u")).collect()
+        assert {r["k"]: r["u"] for r in got} == want
 
 
 def test_timestamps_keep_instants_under_non_utc_session(spark, tmp_path):
